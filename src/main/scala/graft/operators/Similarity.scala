@@ -137,7 +137,9 @@ object Similarity {
     * single narrow map — no cross join, no window, no shuffle (round-1 used
     * a crossJoin + Window sort-shuffle of n×cells rows; ADVICE fix).
     * Ties break to the lowest cell id (first maximum, matching the previous
-    * `array_position(ds, array_max(ds))` expression). */
+    * `array_position(ds, array_max(ds))` expression). That expression
+    * orders NaN above every number, so the first NaN cosine wins as well:
+    * a NaN component, and here also a zero-norm centroid or vector (0/0). */
   def ivfAssign(emb: DataFrame, cells: Int = 16): DataFrame = {
     val cents = centroidArrays(emb, cells)
     val spark = emb.sparkSession
@@ -151,7 +153,7 @@ object Similarity {
           var i = 1
           while (i < cents.length) {
             val d = cosineJvm(cents(i)._2, arr)
-            if (d > bestD) { bestD = d; best = i }
+            if ((d.isNaN && !bestD.isNaN) || d > bestD) { bestD = d; best = i }
             i += 1
           }
           (id, e, cents(best)._1)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,7 +47,8 @@ class BitIdentitySpec extends AnyFunSuite {
     assert(banded.count() == docs.count())
   }
 
-  test("JVM simhash signatures equal the explode/aggregate expression form") {
+  /** Round-6 simhash: explode → md5 word hashes → 60 conditional sums. */
+  private def exprSimhash(docs: DataFrame): Map[Long, Long] = {
     val words = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .select(col("doc_id"),
@@ -58,30 +60,108 @@ class BitIdentitySpec extends AnyFunSuite {
     val sigExpr = (0 until 60).map { i =>
       when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
-    val old = agg.select(col("doc_id"), sigExpr.as("simhash"))
+    agg.select(col("doc_id"), sigExpr.as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val now = Dedup.simhash(docs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(now == old)
   }
 
-  test("JVM hyperplane band keys equal the aggregate(zip_with) expression form") {
-    val bands = 8; val ppb = 16; val dim = 64
+  private def jvmSimhash(docs: DataFrame): Map[Long, Long] =
+    Dedup.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("JVM simhash signatures equal the explode/aggregate expression form") {
+    assert(jvmSimhash(docs) == exprSimhash(docs))
+  }
+
+  private val bands = 8
+  private val ppb = 16
+
+  /** Round-6 band keys: one aggregate(zip_with) dot per hyperplane. */
+  private def exprBandKeys(emb: DataFrame): Map[Long, Seq[Long]] = {
+    val dim = 64
     def bandSketch(b: Int) = (0 until ppb).map { j =>
       val plane = typedlit(Array.tabulate(dim)(c => Dedup.planeCoeff(b * ppb + j, c)))
       val dot = aggregate(zip_with(col("embedding"), plane,
         (x, r) => x.cast("double") * r), lit(0.0), (acc, x) => acc + x)
       when(dot > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
-    val old = emb.select(col("vec_id") +: (0 until bands).map(b => bandSketch(b).as(s"sk$b")): _*)
+    emb.select(col("vec_id") +: (0 until bands).map(b => bandSketch(b).as(s"sk$b")): _*)
       .collect().map(r => r.getLong(0) -> (0 until bands).map(b => r.getLong(1 + b))).toMap
-    val now = Dedup.embeddingBandKeys(emb, bands, ppb)
+  }
+
+  private def jvmBandKeys(emb: DataFrame): Map[Long, Seq[Long]] =
+    Dedup.embeddingBandKeys(emb, bands, ppb)
       .collect().groupBy(_.getLong(0))
       .map { case (id, rows) =>
         id -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
       }
+
+  test("JVM hyperplane band keys equal the aggregate(zip_with) expression form") {
+    val old = exprBandKeys(emb)
+    val now = jvmBandKeys(emb)
     assert(now.keySet == old.keySet)
     old.foreach { case (id, ks) => assert(now(id) == ks, s"vec $id") }
+  }
+
+  test("null text and null embedding rows give the expression forms' output") {
+    val s = spark
+    import s.implicits._
+    val nullDocs = Seq[(Long, String)]((1L, "we collect your email address for ads"),
+        (2L, null), (3L, ""), (4L, "we collect your email address for fraud"))
+      .toDF("doc_id", "text")
+    // shingles (and so minhash keys): the expression form yields [""] for null
+    val exprSh = nullDocs.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    nullDocs.collect().foreach { r =>
+      val id = r.getLong(0)
+      assert(Dedup.shingleStrings(r.getString(1), 3).toSeq == exprSh(id), s"doc $id")
+    }
+    assert(Dedup.minhashBands(nullDocs).count() == 4)
+    // jaccard over the pairs that touch the null row
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 4L)).toDF("a", "b")
+    val shExpr = nullDocs.select(col("doc_id"),
+      array_distinct(Dedup.shingles(col("text"), 3)).as("sh"))
+    val oldJac = pairs
+      .join(shExpr.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
+      .join(shExpr.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
+      .select(col("a"), col("b"), round(size(array_intersect(col("sha"), col("shb"))) /
+        size(array_union(col("sha"), col("shb"))), 4).as("jaccard"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val nowJac = Dedup.verifyJaccard(pairs, nullDocs, 0.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(nowJac == oldJac)
+    // simhash: a null text has no words, so no signature row
+    assert(jvmSimhash(nullDocs) == exprSimhash(nullDocs))
+    assert(!jvmSimhash(nullDocs).contains(2L))
+    // band keys: a null embedding's dots are null, so every key is 0
+    val nullEmb = emb.filter(col("vec_id") < 3).select(col("vec_id"), col("embedding"))
+      .union(Seq[(Long, Seq[Float])]((-1L, null)).toDF("vec_id", "embedding"))
+    assert(jvmBandKeys(nullEmb) == exprBandKeys(nullEmb))
+    assert(jvmBandKeys(nullEmb)(-1L) == Seq.fill(bands)(0L))
+  }
+
+  test("ivfAssign takes the first NaN cosine as the maximum, as array_max does") {
+    val s = spark
+    import s.implicits._
+    val cells = 4
+    def frame(cents: Seq[Seq[Float]]) = (cents.zipWithIndex.map { case (c, i) => (i.toLong, c) } ++
+      Seq(10L -> Seq(1f, 1f), 11L -> Seq(1f, 0f), 12L -> Seq(0f, 1f), 13L -> Seq(-1f, 2f)))
+      .toDF("vec_id", "embedding")
+    def cellsOf(df: DataFrame) = Similarity.ivfAssign(df, cells)
+      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    // a NaN component makes that centroid's cosine NaN for every vector; the
+    // expression form ranks it above all numbers and takes the first one
+    val nanCents = Seq(Seq(1f, 0f), Seq(Float.NaN, 1f), Seq(0f, 1f), Seq(Float.NaN, 0f))
+    val withNaN = frame(nanCents)
+    val ds = array(nanCents.map(c => Similarity.cosine(col("embedding"), typedlit(c))): _*)
+    val old = withNaN
+      .select(col("vec_id"), (array_position(ds, array_max(ds)) - 1).cast("int"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(cellsOf(withNaN) == old)
+    assert(old.filter(_._1 >= 10).values.toSet == Set(1))
+    // a zero-norm centroid's cosine is 0/0 = NaN in the JVM loop, so it wins
+    // the same way (the expression form raises DIVIDE_BY_ZERO under ANSI
+    // and yields null without it, so there is no old value to compare)
+    val zeroNorm = frame(Seq(Seq(1f, 0f), Seq(0f, 1f), Seq(0f, 0f), Seq(1f, 1f)))
+    assert(cellsOf(zeroNorm).filter(_._1 >= 10).values.toSet == Set(2))
   }
 
   test("JVM cosine equals the HOF expression cosine to the last bit") {
