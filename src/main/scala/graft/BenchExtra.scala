@@ -4,13 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round instrumentation (guide §1) — SEPARATE from the frozen
-  * driver contract in [[Bench]]:
-  *   - `explain`: dump `.explain("formatted")` for every declared query to
-  *     plans/<tag>/<name>_<suffix>.txt (the judge checks plan claims there);
-  *   - `probe`: time isolated sub-stages of the expensive queries with the
-  *     noop sink (guide §1.4) so the computation is measured, not the sink,
-  *     each labeled via setJobDescription (guide §1.5).
+/** Plan dump, SEPARATE from the frozen driver contract in [[Bench]]: writes
+  * `.explain("formatted")` for every declared query to
+  * plans/r07/<name>_<suffix>.txt (plan claims are checked there).
+  * `sbt "runMain graft.BenchExtra [suffix]"` (suffix defaults to `before`).
+  * Per-query and per-layer timings live in `graft.Bench` and `kgbench/`.
   */
 object BenchExtra {
 
@@ -26,27 +24,13 @@ object BenchExtra {
     spark
   }
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def noop(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("probe")
-    val suffix = if (args.length > 1) args(1) else "before"
+    val suffix = args.headOption.getOrElse("before")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = session(cpus)
-    try {
-      mode match {
-        case "explain" => explainAll(spark, sfDir, suffix)
-        case _ => probe(spark, sfDir)
-      }
-    } finally spark.stop()
+    try explainAll(spark, sfDir, suffix)
+    finally spark.stop()
   }
 
   private def explainAll(spark: SparkSession, sfDir: String, suffix: String): Unit = {
@@ -67,87 +51,5 @@ object BenchExtra {
         case e: Throwable => println(s"[explain] $name FAILED: ${e.getMessage}")
       }
     }
-  }
-
-  /** Isolated sub-stage timings for the expensive queries (medians of 3). */
-  private def probe(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val sc = spark.sparkContext
-    def docs = Tables.t(spark, sfDir, "documents")
-    def emb = Tables.t(spark, sfDir, "embeddings")
-    def run(label: String)(f: => Unit): Unit = {
-      sc.setJobDescription(label)
-      val ts = (1 to 3).map(_ => time(f))
-      sc.setJobDescription(null)
-      println(f"[probe] $label%-40s median=${ts.sorted.apply(1)}%.3f s  (${ts.map(t => f"$t%.3f").mkString(", ")})")
-    }
-
-    // ---- minhash decomposition ----
-    run("minhash: bands only") { noop(operators.Dedup.minhashBands(docs)) }
-    run("minhash: full pairs") {
-      noop(operators.Dedup.minhashPairs(docs, threshold = 0.5))
-    }
-    run("simhash: signature only") { noop(operators.Dedup.simhash(docs)) }
-    run("simhash: full pairs") { noop(operators.Dedup.simhashPairs(docs)) }
-
-    // ---- embedding dedup decomposition ----
-    val embPlus = {
-      val e = emb.select(col("vec_id"), col("embedding"))
-      e.union(e.filter(col("vec_id") < 50)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-    }
-    run("embdedup: band keys only") {
-      noop(operators.Dedup.embeddingBandKeys(embPlus, bands = 8, planesPerBand = 16))
-    }
-    run("embdedup: full pairs") {
-      noop(operators.Dedup.embeddingPairs(embPlus, threshold = 0.9))
-    }
-
-    // ---- knn ----
-    run("knn: bruteforce") {
-      noop(operators.Similarity.bruteForceTopK(emb, nQueries = 64, k = 5))
-    }
-    run("knn: ivf") {
-      noop(operators.Similarity.ivfTopK(emb, nQueries = 64, k = 5))
-    }
-
-    // ---- alias components ----
-    run("alias: edges gen only") {
-      noop(aliasEdgesFrame(spark))
-    }
-    run("alias: components (no sort)") {
-      noop(kg.AliasResolution.connectedComponents(aliasEdgesFrame(spark)))
-    }
-    run("alias: components + orderBy") {
-      noop(kg.AliasResolution.connectedComponents(aliasEdgesFrame(spark)).orderBy("vertex"))
-    }
-
-    // ---- kg pipeline kernel at scale-digest size ----
-    run("kernel: 24k docs triplesFromPages") {
-      kg.KgPipeline.run(spark, 24000L, 42L).toDF().write
-        .format("noop").mode("overwrite").save()
-    }
-  }
-
-  /** Same synthetic graph kg_alias_components builds (kept in sync by eye —
-    * probe-only tool, not a declared query). */
-  private def aliasEdgesFrame(spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val s = spark
-    val giant = s.range(1, 300001)
-      .select(format_string("g%06d", col("id")).as("src"), lit("g000000").as("dst"))
-    val chain = s.range(0, 4095)
-      .select(format_string("h%06d", col("id")).as("src"),
-        format_string("h%06d", col("id") + 1).as("dst"))
-    val stars = s.range(0, 700000).filter(col("id") % 10 =!= 0)
-      .select(format_string("s%06d", col("id")).as("src"),
-        format_string("s%06d", col("id") - col("id") % 10).as("dst"))
-    val lex = {
-      import s.implicits._
-      graft.nlp.Lexicon.entityInfo.toSeq.sortBy(_._1).flatMap { case (canon, (aliases, _)) =>
-        aliases.toSeq.sorted.map(a => (a, s"entity:$canon"))
-      }.toDF("src", "dst")
-    }
-    giant.union(chain).union(stars).union(lex)
   }
 }

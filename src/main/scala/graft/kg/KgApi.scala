@@ -55,7 +55,6 @@ object KgApi {
 
     def nodes: Vector[String] = nodeType.keys.toVector
     def dataNodes: Vector[String] = nodes.filter(nodeType(_) == "DATA")
-    def actorNodes: Vector[String] = nodes.filter(nodeType(_) == "ACTOR")
 
     /** All nodes reachable from `n` along oriented positive edges. */
     def reachable(n: String): Set[String] = reach(n, adj)
@@ -254,7 +253,8 @@ object KgApi {
       .distinct().orderBy("url", "datatype")
 
   /** KGraph.validate_sharing over closure rows: probe (entity, datatype)
-    * pairs where the entity is among the datatype's collectors. */
+    * pairs where the entity is among the datatype's collectors
+    * (graph_utils.py:341-346). */
   def validateSharingFromClosure(closure: DataFrame,
       pairs: Seq[(String, String)]): DataFrame = {
     val keys = pairs.map { case (e, dt) => s"$e|$dt" }
@@ -310,31 +310,6 @@ object KgApi {
       } yield (url, actor, dt, g.getText(actor, dt).mkString(" || "))
     }.toDF("url", "actor", "datatype", "texts")
       .orderBy("url", "actor", "datatype")
-  }
-
-  /** KGraph.validate_collection for a probe list: (url, datatype) rows where
-    * someone collects the datatype (graph_utils.py:333-339). */
-  def validateCollection(triples: Dataset[Triple], dts: Seq[String]): DataFrame = {
-    import triples.sparkSession.implicits._
-    val probe = dts.toVector
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
-      probe.iterator.filter(dt => g.whoCollect(dt).nonEmpty).map((url, _))
-    }.toDF("url", "datatype").orderBy("url", "datatype")
-  }
-
-  /** KGraph.validate_sharing for probe (entity, datatype) pairs: rows where
-    * the entity is among the datatype's collectors (graph_utils.py:341-346). */
-  def validateSharing(triples: Dataset[Triple],
-      pairs: Seq[(String, String)]): DataFrame = {
-    import triples.sparkSession.implicits._
-    val probe = pairs.toVector
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
-      probe.iterator.collect {
-        case (e, dt) if g.whoCollect(dt).contains(e) => (url, e, dt)
-      }
-    }.toDF("url", "entity", "datatype").orderBy("url", "entity", "datatype")
   }
 
   /** Exported per-party collection tuples (export_poligraph_tuples.py:52-87):

@@ -310,16 +310,6 @@ object AliasResolution {
       : org.apache.spark.sql.DataFrame =
     connectedComponentsDiag(edges, maxIter)._1
 
-  /** As [[connectedComponents]], also reporting the number of shuffle rounds
-    * taken — pointer jumping makes this ≈ log₂(diameter), the property the
-    * adversarial-scale test pins (it disables the local finish to exercise
-    * the distributed path). */
-  def connectedComponentsWithRounds(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25,
-      localFinishEdges: Long = 500000L): (org.apache.spark.sql.DataFrame, Int) = {
-    val (labels, rounds, _) = connectedComponentsDiag(edges, maxIter, localFinishEdges)
-    (labels, rounds)
-  }
-
   /** Full diagnostic variant: (labels, rounds, active-frame sizes after each
     * contraction). PipelineSpec pins the sizes as monotonically shrinking —
     * the round-3 VERDICT defect was a labels frame that stayed at |V|
@@ -352,16 +342,6 @@ object AliasResolution {
     */
   def connectedComponentsDiag(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25,
       localFinishEdges: Long = 500000L): (org.apache.spark.sql.DataFrame, Int, Seq[Long]) = {
-    // phase-timing diagnostics for the optimization probe (BenchExtra);
-    // zero output unless -Dgraft.cc.debug=true
-    val debug = java.lang.Boolean.getBoolean("graft.cc.debug") ||
-      sys.env.get("GRAFT_CC_DEBUG").contains("1")
-    var tPhase = System.nanoTime()
-    def phase(label: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"[cc] $label%-28s ${(now - tPhase) / 1e9}%.3f s")
-      tPhase = now
-    }
     // no distinct here: duplicate edges are harmless to min-aggregation and
     // the first contraction dedupes anyway — a full 2|E| shuffle saved.
     // `und` holds one row per edge; the symmetric view is derived lazily so
@@ -374,7 +354,6 @@ object AliasResolution {
         least(col("src"), col("nbrMin")).as("component"),
         lit(0L).as("chg"))
       .localCheckpoint(true)
-    phase("seed labels")
     var parkedLayers = List.empty[org.apache.spark.sql.DataFrame]
     var checkpoints = List.empty[org.apache.spark.sql.DataFrame]
     var activeSizes = Vector.empty[Long]
@@ -396,7 +375,6 @@ object AliasResolution {
       und = contracted
       checkpoints ::= contracted
       activeEdges = contracted.count()
-      phase("contract: quotient join")
     }
 
     // park vertices that left the contracted graph, shrink the active
@@ -411,7 +389,6 @@ object AliasResolution {
       // one materialization of the flag join; parked/kept are cheap filters
       val flagged = labels.join(activeV.withColumn("_a", lit(1)), Seq("vertex"), "left_outer")
         .localCheckpoint(true)
-      phase("contract: flag join")
       checkpoints ::= flagged
       val parked = flagged.filter(col("_a").isNull)
         .select(col("vertex"), col("component"))
@@ -421,7 +398,6 @@ object AliasResolution {
       if (!parked.isEmpty) parkedLayers ::= parked
       labels = kept
       activeSizes :+= kept.count()
-      phase("contract: park/keep counts")
     }
 
     def contractAndPark(): Unit = { contract(); park() }
@@ -484,7 +460,6 @@ object AliasResolution {
     if (activeEdges == 0L) {
       activeSizes :+= 0L
       val out = labels.select(col("vertex"), col("component")).localCheckpoint(true)
-      phase("fast finish (seed-converged)")
       checkpoints.foreach(_.unpersist())
       labels.unpersist()
       und.unpersist()
@@ -501,7 +476,6 @@ object AliasResolution {
         .select(labels("vertex"),
           coalesce(col("rc"), labels("component")).as("component"))
       val out = resolvedAll.localCheckpoint(true)
-      phase("fast finish (bounded quotient)")
       checkpoints.foreach(_.unpersist())
       labels.unpersist()
       und.unpersist()
@@ -509,8 +483,9 @@ object AliasResolution {
     }
     park()
 
-    var changed = if (activeSizes.last == 0L || finishLocally()) 0L else 1L
-    phase("local finish")
+    // the early returns above leave a quotient above the local-finish bound
+    // whose endpoints are seed labels, hence kept vertices: round one runs
+    var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
       val prev = labels
@@ -547,7 +522,6 @@ object AliasResolution {
         if (finishLocally()) changed = 0
       }
       i += 1
-      phase(s"iterate round $i")
     }
     und.unpersist()
 
@@ -572,7 +546,6 @@ object AliasResolution {
     // materialize once, then free every intermediate checkpoint — repeated
     // in-session runs (bench medians) must not accumulate block-manager state
     val out = resolved.localCheckpoint(true)
-    phase("resolve parked + materialize")
     checkpoints.foreach(_.unpersist())
     labels.unpersist()
     (out, i, activeSizes)

@@ -42,17 +42,14 @@ object SemTrain {
     }.toVector
   }
 
-  /** Training rows (gold oversampled 6× over the synthetic corpus), with
-    * an optional batch-exclusion for capacity experiments that SELECT on a
-    * held-out closed batch (the committed model always trains on all). */
-  def rows(excludeUrls: Set[String] = Set.empty): Vector[(Array[(Int, Float)], Float)] = {
+  /** Training rows (gold oversampled 6× over the synthetic corpus). */
+  def rows(): Vector[(Array[(Int, Float)], Float)] = {
     import graft.kg.{Holdout, SemanticScorer}
-    val gold = goldDocs.filterNot(g => excludeUrls.contains(g._1.url))
-      .flatMap { case (pg, truth) =>
-        SemanticScorer.candidates(pg.url, new String(pg.html, UTF_8)).map { c =>
-          c.feats -> (if (truth.contains((c.url, c.party, c.datum))) 1f else 0f)
-        }
+    val gold = goldDocs.flatMap { case (pg, truth) =>
+      SemanticScorer.candidates(pg.url, new String(pg.html, UTF_8)).map { c =>
+        c.feats -> (if (truth.contains((c.url, c.party, c.datum))) 1f else 0f)
       }
+    }
     // synthetic rows: the generated corpus, labeled by the kernel (exact
     // there — corpus P/R = 1.0 is suite-pinned), for volume and negatives
     val corpus = graft.gen.CorpusGen.corpus(150, 7L).filter(_.page.lang == "en")

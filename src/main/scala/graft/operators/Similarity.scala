@@ -32,7 +32,9 @@ import org.apache.spark.sql.expressions.Window
 object Similarity {
 
   /** Codegen-friendly cosine similarity of two float-array columns (kept for
-    * bounded verify stages, e.g. the embedding-dedup candidate check). */
+    * bounded verify stages, e.g. the embedding-dedup candidate check). A
+    * zero-norm side gives null, not ANSI's DIVIDE_BY_ZERO, so one all-zero
+    * embedding cannot fail the job; NaN inputs still give NaN. */
   def cosine(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
@@ -40,12 +42,13 @@ object Similarity {
       lit(0.0), (acc, x) => acc + x))
     val nb = sqrt(aggregate(transform(b, x => x.cast("double") * x.cast("double")),
       lit(0.0), (acc, x) => acc + x))
-    dot / (na * nb)
+    try_divide(dot, na * nb)
   }
 
   /** JVM twin of [[cosine]] with the identical accumulation order — left
     * fold from 0.0 in element order for dot and both norms, then
-    * `dot / (na * nb)` — so the result is bit-identical per IEEE-754. */
+    * `dot / (na * nb)` — so the result is bit-identical per IEEE-754 for
+    * nonzero norms (a zero norm gives NaN here, null there). */
   private def cosineJvm(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0
     var i = 0

@@ -158,10 +158,21 @@ class BitIdentitySpec extends AnyFunSuite {
     assert(cellsOf(withNaN) == old)
     assert(old.filter(_._1 >= 10).values.toSet == Set(1))
     // a zero-norm centroid's cosine is 0/0 = NaN in the JVM loop, so it wins
-    // the same way (the expression form raises DIVIDE_BY_ZERO under ANSI
-    // and yields null without it, so there is no old value to compare)
+    // the same way (the expression form gives null there, which array_max
+    // skips, so there is no old value to compare)
     val zeroNorm = frame(Seq(Seq(1f, 0f), Seq(0f, 1f), Seq(0f, 0f), Seq(1f, 1f)))
     assert(cellsOf(zeroNorm).filter(_._1 >= 10).values.toSet == Set(2))
+  }
+
+  test("expression cosine over a zero-norm vector collects null, not DIVIDE_BY_ZERO") {
+    val s = spark
+    import s.implicits._
+    val zero = Seq(0f, 0f, 0f)
+    val v = Seq(1f, 2f, 3f)
+    val got = Seq((zero, v), (v, zero), (zero, zero)).toDF("a", "b")
+      .select(Similarity.cosine(col("a"), col("b"))).collect()
+    assert(got.length == 3)
+    assert(got.forall(_.isNullAt(0)), got.mkString(", "))
   }
 
   test("JVM cosine equals the HOF expression cosine to the last bit") {

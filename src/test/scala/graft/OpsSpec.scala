@@ -86,6 +86,28 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs == 100L * 99 / 2, s"expected 4950 within-cluster pairs, got $pairs")
   }
 
+  test("a zero-norm embedding among the LSH candidates does not fail the job") {
+    val s = spark
+    import s.implicits._
+    // v has every band-0 projection below 0, so its band-0 key is 0: the
+    // key an all-zero embedding has in every band. Perceptron steps away
+    // from each plane v still points along, until all 16 clear a margin.
+    val planes = (0 until 16).map(j => Array.tabulate(64)(c => Dedup.planeCoeff(j, c)))
+    val v = Array.fill(64)(0f)
+    def dot(p: Array[Double]) = p.indices.map(c => v(c).toDouble * p(c)).sum
+    var steps = 0
+    while (planes.exists(dot(_) > -0.1) && steps < 1000) {
+      planes.filter(dot(_) > -0.1).foreach(p => p.indices.foreach(c => v(c) -= p(c).toFloat))
+      steps += 1
+    }
+    val frame = Seq((1L, Seq.fill(64)(0f)), (2L, v.toSeq)).toDF("vec_id", "embedding")
+    val band0 = Dedup.embeddingBandKeys(frame, bands = 8, planesPerBand = 16)
+      .filter(col("b") === 0).select("k").collect().map(_.getLong(0))
+    assert(band0.toSeq == Seq(0L, 0L), s"the pair must share band 0: ${band0.toSeq}")
+    // the pair is a candidate; its null cosine fails even the loosest filter
+    assert(Dedup.embeddingPairs(frame, threshold = -1.0).count() == 0L)
+  }
+
   test("embedding identity collapse never shuffles the raw vector as a key") {
     // round-4 VERDICT wrong #3: the identity-collapse window used
     // partitionBy(embedding), moving full float arrays as exchange keys.

@@ -92,23 +92,28 @@ class PipelineSpec extends AnyFunSuite {
         format_string("c%04d", col("id") + 1).as("dst"))
     // localFinishEdges=0 disables the driver union-find so the distributed
     // propagate/jump path is what's measured
-    val (labels, rounds) = graft.kg.AliasResolution.connectedComponentsWithRounds(
+    val (labels, rounds, _) = graft.kg.AliasResolution.connectedComponentsDiag(
       chain, localFinishEdges = 0L)
     assert(labels.select("component").distinct().count() == 1)
     assert(rounds <= 12, s"rounds=$rounds for diameter 1023")
   }
 
-  test("label parking: active frame shrinks monotonically and stars park at seed") {
-    import spark.implicits._
-    // 10k-spoke star + 64-node chain: the star must park at the first
-    // contraction, so the iterate phase only ever shuffles the chain core
+  /** 10k-spoke star + 64-node chain (10,065 vertices). */
+  private def starAndChain = {
     val star = spark.range(1, 10001)
       .select(format_string("g%05d", col("id")).as("src"), lit("g00000").as("dst"))
     val chain = spark.range(0, 63)
       .select(format_string("h%05d", col("id")).as("src"),
         format_string("h%05d", col("id") + 1).as("dst"))
+    star.union(chain)
+  }
+
+  test("label parking: active frame shrinks monotonically and stars park at seed") {
+    import spark.implicits._
+    // the star must park at the first contraction, so the iterate phase
+    // only ever shuffles the chain core
     val (labels, _, sizes) = graft.kg.AliasResolution.connectedComponentsDiag(
-      star.union(chain), localFinishEdges = 0L)
+      starAndChain, localFinishEdges = 0L)
     assert(sizes.nonEmpty)
     assert(sizes.head < 200,
       s"star vertices must park at the seed contraction; active size ${sizes.head}")
@@ -118,6 +123,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(comps.size == 10065)
     assert(comps("g09999") == "g00000" && comps("g00000") == "g00000")
     assert(comps("h00063") == "h00000" && comps("h00031") == "h00000")
+  }
+
+  test("in-loop local finish gives the distributed path's labels") {
+    // the label-parking graph with an 8-edge bound: the seed quotient (62
+    // chain edges) is above it, so the distributed loop runs until a later
+    // contraction fits and the driver union-find ends it early
+    def run(bound: Long) = {
+      val (labels, rounds, sizes) = graft.kg.AliasResolution.connectedComponentsDiag(
+        starAndChain, localFinishEdges = bound)
+      (labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap, rounds, sizes)
+    }
+    val (distributed, distRounds, _) = run(0L)
+    val (finished, rounds, sizes) = run(8L)
+    assert(sizes.size >= 2, s"no in-loop contraction: $sizes")
+    assert(sizes == sizes.sorted.reverse, s"active frame grew: $sizes")
+    assert(rounds < distRounds,
+      s"local finish did not end the loop: $rounds rounds vs $distRounds distributed")
+    assert(finished == distributed)
   }
 
   test("alias components merge aliases of the same entity") {
