@@ -10,12 +10,12 @@ import graft.gen.CorpusGen
   *
   * Observed data flows (app url, destination domain, datatype) are checked
   * against the app's knowledge graph: the destination resolves to an entity
-  * through the registered-domain map (broadcast J8), the flow is consistent
-  * when the policy discloses a COLLECT-family edge whose actor is that
-  * entity (or `we` for first-party flows, or an entity-ontology ancestor)
-  * and whose data type is the flow's datatype or a data-ontology /
-  * per-policy SUBSUM ancestor of it (G9 ontology grafting as broadcast
-  * closure joins).
+  * through the registered-domain map (J8), the flow is consistent when the
+  * policy discloses a COLLECT-family edge whose actor is that entity (or
+  * `we` for first-party flows, or an entity-ontology ancestor) and whose
+  * data type is the flow's datatype or a data-ontology / per-policy SUBSUM
+  * ancestor of it (G9 ontology grafting). `classify` settles each url's
+  * flows in one pass over that url's triples; there is no join.
   */
 object FlowConsistency {
 
@@ -78,101 +78,68 @@ object FlowConsistency {
     }
   }
 
-  /** Spark-side classification: everything is a broadcast join against the
-    * (tiny) ontology/domain tables plus one join against the policy triples.
-    * Output verdicts: consistent | inconsistent | unknown_entity. */
+  /** The COLLECT-family predicates a flow's disclosure may use. */
+  private val CollectPreds: Set[String] = Set("COLLECT", "BE_SHARED", "BE_SOLD", "USE", "STORE")
+
+  // child -> ancestors, registered domain -> entities: JVM-singleton maps
+  private lazy val dataAnc = Ontology.dataClosure.groupMap(_._2)(_._1).view.mapValues(_.toSet).toMap
+  private lazy val entAnc = Ontology.entityClosure.groupMap(_._2)(_._1).view.mapValues(_.toSet).toMap
+  private lazy val domainEntities = Ontology.domainEntity.groupMap(_._1)(_._2)
+  private val AppHost = "^https?://([^/]+)".r
+
+  /** Spark-side classification: one url-keyed cogroup of the flows with
+    * that url's COLLECT-family and SUBSUM triples; each url's flows are
+    * classified in plain Scala against the ontology closures held as JVM
+    * maps. The destination resolves to entities through its registered
+    * domain (J8/F7), or to `we` when the app's host ends with it. A flow is
+    * consistent when a disclosure's actor is the entity, one of its entity-
+    * ontology ancestors or a per-policy ACTOR SUBSUM ancestor, and its data
+    * type is the flow's datatype, a data-ontology ancestor or a per-policy
+    * DATA SUBSUM ancestor (G9). Per-policy ancestors follow the reference's
+    * transitive hypernym BFS (flow_consistency_analysis.py:118-203) and keep
+    * a node only when the subjType of the edge that reached it matches.
+    * One row per distinct (url, domain, datatype); verdicts: consistent |
+    * inconsistent | unknown_entity. */
   def classify(spark: SparkSession, flowsDf: DataFrame, triples: DataFrame): DataFrame = {
     import spark.implicits._
-    val domains = Ontology.domainEntity.toDF("domain", "entity")
-    val dataAnc = Ontology.dataClosure.map(_.swap).toDF("fdt", "anc_dt") // child -> ancestor
-    val entAnc = Ontology.entityClosure.map(_.swap).toDF("fent", "anc_ent")
-
-    // resolve destination entity: known map, else first-party when the flow
-    // domain equals the app's own registered domain
-    val resolved = flowsDf
-      // F7: reduce the observed destination host to its PSL registered
-      // domain in-plan (codegen column expression, no UDF) before the
-      // entity-map join — "metrics.google.co.uk" → "google.co.uk"
-      .withColumn("domain_reg", Ontology.registeredDomainCol(col("domain")))
-      .join(broadcast(domains.withColumnRenamed("domain", "rdomain")),
-        col("domain_reg") === col("rdomain"), "left_outer")
-      .drop("rdomain")
-      .withColumn("app_domain",
-        regexp_extract(col("url"), "^https?://([^/]+)", 1))
-      .withColumn("entity",
-        when(col("entity").isNotNull, col("entity"))
-          .when(expr("app_domain LIKE '%' || domain_reg"), lit("we")))
-
-    val collectPreds = Seq("COLLECT", "BE_SHARED", "BE_SOLD", "USE", "STORE")
-    val disclosures = triples
-      .filter(col("pred").isin(collectPreds: _*))
-      .select(col("url").as("durl"), col("subj").as("dactor"), col("obj").as("ddt"))
-
-    // acceptable (actor, datatype) pairs per flow: entity itself, an
-    // entity-ontology ancestor, or a per-policy ACTOR-SUBSUM ancestor;
-    // datatype itself, a data-ontology ancestor, or a per-policy SUBSUM
-    // ancestor — TRANSITIVELY, matching the reference's hypernym BFS
-    // (flow_consistency_analysis.py:118-203): per-doc closures computed in
-    // one mapGroups pass over the (tiny) per-policy SUBSUM graphs
-    val subsumClosure = {
-      import spark.implicits._
-      triples.filter(col("pred") === "SUBSUM")
-        .select(col("url"), col("subj"), col("obj"), col("subjType"))
-        .as[(String, String, String, String)]
-        .groupByKey(_._1).flatMapGroups { (url, it) =>
-          val edges = it.toVector
-          // parent pointers per node type universe (data: subj SUBSUM obj;
-          // actors share the same orientation)
-          val radj = edges.groupBy(_._3).view
-            .mapValues(_.map(e => (e._2, e._4))).toMap
-          val descs = edges.map(e => (e._3, e._4)).distinct
-          descs.iterator.flatMap { case (d, _) =>
-            val seen = scala.collection.mutable.Set(d)
-            val q = scala.collection.mutable.Queue(d)
-            val out = Vector.newBuilder[(String, String, String, String)]
-            while (q.nonEmpty) {
-              radj.getOrElse(q.dequeue(), Vector.empty).foreach { case (a, at) =>
-                if (!seen.contains(a)) {
-                  seen += a; q.enqueue(a); out += ((url, d, a, at))
-                }
-              }
-            }
-            out.result().iterator
+    val policy = triples.filter(col("pred").isin((CollectPreds + "SUBSUM").toSeq: _*))
+      .select("url", "subj", "pred", "obj", "subjType")
+      .as[(String, String, String, String, String)].groupByKey(_._1)
+    flowsDf.select("url", "domain", "datatype").as[(String, String, String)]
+      .groupByKey(_._1)
+      .cogroup(policy) { (url, flows, edges) =>
+        // a null url matches no triples, as a null join key would not
+        val es = if (url == null) Vector.empty else edges.toVector
+        val disclosed = es.collect { case (_, s, p, o, _) if p != "SUBSUM" => (s, o) }
+        // parent pointers: subj SUBSUM obj makes subj an ancestor of obj
+        val up = es.filter(_._3 == "SUBSUM").groupMap(_._4)(e => (e._2, e._5))
+        def policyAnc(node: String, tpe: String): Set[String] = {
+          val seen = scala.collection.mutable.Set(node)
+          val q = scala.collection.mutable.Queue(node)
+          val out = Set.newBuilder[String]
+          while (q.nonEmpty) up.getOrElse(q.dequeue(), Vector.empty).foreach { case (a, at) =>
+            if (seen.add(a)) { q.enqueue(a); if (at == tpe && a != null) out += a }
           }
-        }.toDF("surl", "sdesc", "sanc", "sancType")
-    }
-    val dtSubsum = subsumClosure.filter(col("sancType") === "DATA")
-      .select(col("surl"), col("sdesc"), col("sanc"))
-    val entSubsum = subsumClosure.filter(col("sancType") === "ACTOR")
-      .select(col("surl").as("eurl"), col("sdesc").as("edesc"), col("sanc").as("eanc"))
-
-    val withDtCandidates = resolved
-      .join(broadcast(dataAnc), col("datatype") === col("fdt"), "left_outer")
-      .join(dtSubsum,
-        col("url") === col("surl") && col("datatype") === col("sdesc"), "left_outer")
-      .withColumn("dt_cand",
-        array_distinct(filter(array(col("datatype"), col("anc_dt"), col("sanc")), _.isNotNull)))
-    val withEntCandidates = withDtCandidates
-      .join(broadcast(entAnc), col("entity") === col("fent"), "left_outer")
-      .join(entSubsum,
-        col("url") === col("eurl") && col("entity") === col("edesc"), "left_outer")
-      .withColumn("ent_cand",
-        array_distinct(filter(array(col("entity"), col("anc_ent"), col("eanc")), _.isNotNull)))
-
-    val matched = withEntCandidates
-      .join(disclosures,
-        col("url") === col("durl") &&
-          array_contains(col("ent_cand"), col("dactor")) &&
-          array_contains(col("dt_cand"), col("ddt")),
-        "left_outer")
-      .groupBy(col("url"), col("domain"), col("datatype"))
-      .agg(max(col("entity")).as("entity"),
-        count(col("durl")).as("n_matches"))
-
-    matched.select(col("url"), col("domain"), col("datatype"),
-      when(col("entity").isNull, "unknown_entity")
-        .when(col("n_matches") > 0, "consistent")
-        .otherwise("inconsistent").as("verdict"))
+          out.result()
+        }
+        val app = Option(url).map(u => AppHost.findFirstMatchIn(u).fold("")(_.group(1)))
+        flows.map(f => (f._2, f._3)).toVector.distinct.iterator.map { case (domain, dt) =>
+          val reg = Ontology.registeredDomain(Option(domain).getOrElse(""))
+          val entities = domainEntities.getOrElse(reg,
+            if (app.exists(_.endsWith(reg))) Seq("we") else Nil)
+          val verdict =
+            if (entities.isEmpty) "unknown_entity"
+            else {
+              val dtCand = Option(dt).fold(Set.empty[String])(d =>
+                policyAnc(d, "DATA") ++ dataAnc.getOrElse(d, Set.empty) + d)
+              val entCand = entities.flatMap(e =>
+                policyAnc(e, "ACTOR") ++ entAnc.getOrElse(e, Set.empty) + e).toSet
+              if (disclosed.exists { case (a, d) => entCand(a) && dtCand(d) }) "consistent"
+              else "inconsistent"
+            }
+          (url, domain, dt, verdict)
+        }
+      }.toDF("url", "domain", "datatype", "verdict")
   }
 
   /** Independent oracle-side classification over ground truth (plain Scala,
@@ -181,9 +148,6 @@ object FlowConsistency {
   def classifyTruth(nDocs: Int, seed: Long = 42L): Seq[(String, String, String, String)] = {
     val byUrl = CorpusGen.corpus(nDocs, seed).map(gp => gp.page.url -> gp.truth).toMap
     val domains = Ontology.domainEntity.toMap
-    val dataAnc = Ontology.dataClosure.groupBy(_._2).view.mapValues(_.map(_._1).toSet).toMap
-    val entAnc = Ontology.entityClosure.groupBy(_._2).view.mapValues(_.map(_._1).toSet).toMap
-    val collectPreds = Set("COLLECT", "BE_SHARED", "BE_SOLD", "USE", "STORE")
     flows(nDocs, seed).map { f =>
       val appDomain = Ontology.registeredDomain(Ontology.hostOf(f.url))
       val reg = Ontology.registeredDomain(f.domain)
@@ -213,7 +177,7 @@ object FlowConsistency {
             policyAnc(f.datatype, "DATA")
           val entCand = Set(e) ++ entAnc.getOrElse(e, Set.empty) ++
             policyAnc(e, "ACTOR")
-          val ok = truths.exists(t => collectPreds(t.pred) &&
+          val ok = truths.exists(t => CollectPreds(t.pred) &&
             entCand(t.subj) && dtCand(t.obj))
           if (ok) "consistent" else "inconsistent"
       }

@@ -1,5 +1,7 @@
 package graft.kg
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -262,26 +264,40 @@ final class StageStore(spark: SparkSession, baseDir: String, runId: String) {
 
   def stage[T: Encoder](name: String, partitionCols: Seq[String] = Nil)(
       compute: => Dataset[T]): Dataset[T] =
-    stageDf(name, partitionCols)(compute.toDF()).as[T]
+    write(name, partitionCols)(compute).as[T]
 
   /** Untyped variant for stages whose schema is SQL-facing (snake_case
     * columns with no case-class twin, e.g. the closure table). */
   def stageDf(name: String, partitionCols: Seq[String] = Nil)(
-      compute: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      compute: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    write(name, partitionCols)(compute)
+
+  /** Writes the stage in one job whose tasks count their own rows into an
+    * accumulator on the way to the writer (one value per write partition,
+    * so a re-run task counts once), then appends those counts to `_lineage`
+    * as a small local table. The stage table is never read back: the
+    * returned reader takes the written schema instead of inferring it from
+    * the files' footers, which would cost a Spark job. `wallMs` covers the
+    * write job. */
+  private def write[T](name: String, partitionCols: Seq[String])(
+      compute: => Dataset[T]): org.apache.spark.sql.DataFrame = {
     val path = s"$baseDir/$name"
     if (!exists(name)) {
       val t0 = System.currentTimeMillis()
-      compute.write.mode("overwrite")
-        .partitionBy(partitionCols: _*).parquet(path)
-      val out = spark.read.parquet(path)
+      val rows = spark.sparkContext.collectionAccumulator[(Int, Long)](s"rows of $name")
+      val ds = compute
+      ds.mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        var n = 0L
+        it.map { r => n += 1; r } ++ { if (n > 0) rows.add((pid, n)); Iterator.empty }
+      }(ds.encoder).write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
       val wall = System.currentTimeMillis() - t0
-      out.groupBy(spark_partition_id().as("partitionId"))
-        .agg(count(lit(1)).as("rowsOut"))
-        .withColumn("runId", lit(runId))
-        .withColumn("stage", lit(name))
-        .withColumn("wallMs", lit(wall))
+      import spark.implicits._
+      rows.value.asScala.toMap.toSeq.sorted
+        .map { case (pid, n) => (pid, n, runId, name, wall) }
+        .toDF("partitionId", "rowsOut", "runId", "stage", "wallMs")
         .write.mode("append").parquet(s"$baseDir/_lineage")
-      out
+      spark.read.schema(ds.schema).parquet(path)
     } else spark.read.parquet(path)
   }
 

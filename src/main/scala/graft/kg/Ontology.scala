@@ -4,8 +4,8 @@ package graft.kg
   * of the reference's data ontology DAG (45 nodes,
   * extra-data/data_ontology_readable.graphml) and entity-category ontology
   * (graph_utils.py:15-73), expressed over this engine's canonical terms.
-  * Transitive closure is precomputed on the driver and broadcast — the
-  * tables are tiny and every consumer is a broadcast join (G9/G11).
+  * Transitive closure is precomputed once per JVM — the tables are tiny,
+  * and flow consistency reads them as in-memory maps (G9/G11).
   */
 object Ontology {
 
@@ -96,7 +96,7 @@ object Ontology {
   lazy val dataClosure: Seq[(String, String)] = closureOf(dataEdges)
   lazy val entityClosure: Seq[(String, String)] = closureOf(entityEdges)
 
-  /** Registered-domain → canonical entity (J8/F7; a broadcast map standing
+  /** Registered-domain → canonical entity (J8/F7; an in-memory map standing
     * in for the public-suffix-list + entity_info join). */
   lazy val domainEntity: Seq[(String, String)] =
     graft.nlp.Lexicon.entityInfo.toSeq.flatMap { case (canon, (_, domains)) =>
@@ -124,23 +124,6 @@ object Ontology {
     else if (multiLabelSuffixes.contains(labels.takeRight(2).mkString(".")))
       labels.takeRight(math.min(3, labels.length)).mkString(".")
     else labels.takeRight(2).mkString(".")
-  }
-
-  /** Column-expression twin of [[registeredDomain]] — the suffix table is a
-    * literal set membership, so flow classification stays UDF-free and
-    * codegen-friendly at scale. */
-  def registeredDomainCol(d: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    // drop empty labels exactly like the driver twin's filter(_.nonEmpty):
-    // hosts with leading/trailing/consecutive dots ("foo.com.") must not
-    // diverge between the Spark plan and the DuckDB/driver oracle
-    val parts = filter(split(lower(d), "\\."), x => x =!= lit(""))
-    val n = size(parts)
-    val last2 = concat_ws(".", slice(parts, greatest(n - lit(1), lit(1)), lit(2)))
-    when(n >= lit(3) && last2.isInCollection(multiLabelSuffixes),
-        concat_ws(".", slice(parts, n - lit(2), lit(3))))
-      .when(n >= lit(2), last2)
-      .otherwise(concat_ws(".", parts))
   }
 
   def hostOf(url: String): String =

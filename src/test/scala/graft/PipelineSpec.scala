@@ -13,6 +13,7 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("resume from checkpoint produces identical triples (t3)") {
+    import spark.implicits._
     val dir = Files.createTempDirectory("graft-ckpt").toString
     val first = KgPipeline.runCheckpointed(spark, 20, dir, "run1")
       .select("url", "subj", "pred", "obj").collect().map(_.toString).sorted
@@ -21,11 +22,17 @@ class PipelineSpec extends AnyFunSuite {
       .select("url", "subj", "pred", "obj").collect().map(_.toString).sorted
     assert(first.nonEmpty)
     assert(first.sameElements(second))
-    // lineage has per-partition rows for both stages
+    // lineage: one row per (run, stage, write partition); per stage the rows
+    // sum to the stage table's size; the resumed run wrote no stage, so it
+    // appended no lineage row
     val lineage = new StageStore(spark, dir, "x").lineage()
-    val stages = lineage.select("stage").distinct().collect().map(_.getString(0)).toSet
-    assert(stages == Set("segments", "triples_raw", "triples", "closure"))
-    assert(lineage.filter(col("rowsOut") > 0).count() > 0)
+      .select("runId", "stage", "partitionId", "rowsOut").as[(String, String, Int, Long)]
+      .collect().toSeq
+    assert(lineage.map(_._1).toSet == Set("run1"))
+    assert(lineage.map(r => (r._1, r._2, r._3)).distinct.size == lineage.size)
+    val stages = Seq("segments", "triples_raw", "triples", "closure")
+    assert(lineage.groupMapReduce(_._2)(_._4)(_ + _) ==
+      stages.map(st => st -> spark.read.parquet(s"$dir/$st").count()).toMap)
     // the closure stage table answers who_collect as a pure filter,
     // identically to recomputing reachability from the triples
     val fromStage = graft.kg.KgApi.whoCollectFromClosure(

@@ -1,10 +1,30 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
-import graft.kg.{GraphExport, KgPipeline}
+import graft.kg.{FlowConsistency, GraphExport, KgPipeline, KgQueries}
+
+/** Nodes of an executed plan, through adaptive plans and query stages. */
+object PlanNodes extends AdaptiveSparkPlanHelper {
+  def all(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+  /** Root paths of the files the plan scans. */
+  def scans(p: SparkPlan): Seq[String] =
+    collect(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString) }.flatten
+  /** Output paths of the plan's file writes. */
+  def writes(p: SparkPlan): Seq[String] = collect(p) {
+    case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) => c.outputPath.toString
+  }
+}
 
 /** Physical-plan quality gates: pushdown reaches the scan, small dims are
   * broadcast, hot paths stay in whole-stage codegen, and the custom
@@ -183,5 +203,52 @@ class PlanSpec extends AnyFunSuite {
     // scoring is a narrow map — no shuffle
     val p = plan(PrivacyScorer.score(pages))
     assert(!p.contains("Exchange"), s"scorer shuffles:\n$p")
+  }
+
+  test("a checkpointed run writes each stage in one action and never reads one back") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      KgPipeline.runCheckpointed(spark, 20, dir, "jobs")
+      // listener events arrive in order on one queue: wait for a marker
+      spark.range(1).toDF("plan_spec_fence").collect()
+      def fenced = seen.asScala.exists(_.analyzed.output.map(_.name) == Seq("plan_spec_fence"))
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(fenced, "listener never saw the fence action")
+    } finally spark.listenerManager.unregister(listener)
+    val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+    // stage names under the run directory a plan scans / writes
+    def under(paths: Seq[String]) = paths.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
+      .filter(_.startsWith(root + "/")).map(_.stripPrefix(root + "/"))
+    val actions = seen.asScala.toSeq.map(_.executedPlan)
+      .map(p => (under(PlanNodes.scans(p)), under(PlanNodes.writes(p))))
+      .filter { case (r, w) => r.nonEmpty || w.nonEmpty }
+    val stages = Seq("segments", "triples_raw", "triples", "closure")
+    // one write per stage, one lineage append per stage, one purpose-label collect
+    assert(actions.flatMap(_._2).sorted == (stages ++ Seq.fill(4)("_lineage")).sorted, actions)
+    assert(actions.size == 9, actions)
+    assert(actions.forall { case (r, w) => r.intersect(w).isEmpty }, actions)
+    assert(actions.filter(_._2 == Seq("_lineage")).forall(_._1.isEmpty), actions)
+    // each stage table is read only by the stages downstream of it
+    assert(actions.flatMap(_._1).sorted ==
+      Seq("segments", "triples", "triples_raw", "triples_raw"), actions)
+  }
+
+  test("flow classification joins no ontology table") {
+    val s = spark
+    import s.implicits._
+    val out = FlowConsistency.classify(spark,
+      FlowConsistency.flows(KgQueries.N_DOCS).toDF(), KgQueries.sharedTriples(spark).toDF())
+    assert(out.collect().nonEmpty)
+    val nodes = PlanNodes.all(out.queryExecution.executedPlan)
+    assert(nodes.collect { case j: BaseJoinExec => j }.isEmpty,
+      s"classify joins:\n${out.queryExecution.executedPlan}")
+    assert(nodes.size <= 40, s"${nodes.size} plan nodes:\n${out.queryExecution.executedPlan}")
   }
 }
