@@ -2,7 +2,8 @@ package graft.kg
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.gen.CorpusGen
@@ -305,265 +306,142 @@ final class StageStore(spark: SparkSession, baseDir: String, runId: String) {
     spark.read.parquet(s"$baseDir/_lineage")
 }
 
-/** G12: corpus-level entity-alias resolution — the one genuinely distributed
-  * graph op. Hash-min connected components via iterative self-joins (the
-  * standard Pregel-style formulation; converges in O(diameter) rounds, each
-  * a shuffle — alias graphs are shallow stars so 3-5 rounds suffice).
+/** G12: corpus-level entity-alias resolution, the one genuinely distributed
+  * graph op: connected components over the alias edge list, contracting the
+  * graph until it fits the driver and finishing there with a union-find.
   */
 object AliasResolution {
 
-  /** edges: DataFrame(src: String, dst: String) undirected.
-    * Returns DataFrame(vertex: String, component: String) where component is
-    * the lexicographic min vertex of the component.
-    *
-    * Iteration hygiene (round-2 ADVICE): the changed-count is folded into
-    * the propagate frame so each round is ONE action (no re-execution of the
-    * join), superseded label frames are unpersisted, and lineage is
-    * truncated with `localCheckpoint` every 3 rounds — without which the
-    * plan tree grows unboundedly and real-corpus alias graphs (10⁸ edges)
-    * blow up driver planning. Converges in O(diameter) shuffle rounds. */
-  def connectedComponents(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25)
-      : org.apache.spark.sql.DataFrame =
-    connectedComponentsDiag(edges, maxIter)._1
+  /** Largest estimated driver footprint of a quotient graph that is
+    * collected and union-found locally: 500k edges of 7-character names
+    * fit. */
+  val LocalFinishBytes: Long = 64L << 20
 
-  /** Full diagnostic variant: (labels, rounds, active-frame sizes after each
-    * contraction). PipelineSpec pins the sizes as monotonically shrinking —
-    * the round-3 VERDICT defect was a labels frame that stayed at |V|
-    * forever, so every late round shuffled a million converged labels.
-    *
-    * Two-phase structure with LABEL parking:
-    *   1. seed: component = min(vertex, min neighbor) in one aggregation;
-    *   2. contract the edge list to component representatives (drop
-    *      self-loops) and PARK every vertex absent from the contracted
-    *      graph. Parking is safe mid-stream because an absent vertex either
-    *      (a) points one hop to a representative that stays active, or
-    *      (b) sits in a label-cluster with no crossing edges — which by
-    *      connectivity is a whole component, fully converged with flat
-    *      labels at its minimum. Star-dominated alias graphs park ~99% of
-    *      |V| at the first contraction, so late rounds shuffle only the
-    *      unresolved core (a long chain's representatives);
-    *   3. once the contracted graph fits `localFinishEdges` (default 500k
-    *      edges ≈ tens of MB — a documented, bounded collect), finish with
-    *      a driver-side union-find: each residual distributed round costs
-    *      ~seconds of scheduling overhead on a frame of thousands of rows,
-    *      while the local pass is milliseconds. Star-dominated web alias
-    *      graphs contract 10⁶ vertices → ~10³ core at the seed step; a
-    *      graph whose quotient stays above the bound keeps iterating
-    *      propagate + pointer-jump distributed, contracting every other
-    *      round, until it fits;
-    *   4. resolve parked layers most-recent-first: each layer needs ONE
-    *      left-outer join against the already-resolved frame (its targets
-    *      are final-active or parked later; same-layer targets are flat
-    *      self-labels covered by the coalesce).
+  /** Driver bytes of one collected edge beyond its names: the row, its
+    * field array, two String headers and their byte-array headers. */
+  private val EdgeBytes = 120L
+
+  /** edges: DataFrame(src: String, dst: String), undirected. Returns
+    * DataFrame(vertex: String, component: String), where component is the
+    * lexicographically least vertex of the component. */
+  def connectedComponents(edges: DataFrame): DataFrame = connectedComponentsDiag(edges)._1
+
+  /** Components with diagnostics: (labels, jump passes, vertex count of each
+    * contracted graph). Round k = 0, 1, … runs on the current graph g_k,
+    * with g_0 the input:
+    *   1. hook: label(v) = least(v, min neighbour);
+    *   2. for k ≥ 1 only, jump: label := label(label) until no label moves,
+    *      so each label is the root, hence the minimum, of its hook tree.
+    *      Round 0 skips it: star-shaped alias graphs collapse in the hook;
+    *   3. contract: g_{k+1} = distinct (label(src), label(dst)) without
+    *      self-loops. The checkpoint that builds it also counts its edges
+    *      and estimates its driver bytes;
+    *   4. if the estimate fits `localFinishBytes` (an empty g_{k+1} always
+    *      does), union-find g_{k+1} on the driver and stop; else run k+1.
+    * A label that is no vertex of g_{k+1} heads a cluster without crossing
+    * edges: a whole component, labelled at its minimum. Every other label
+    * resolves through the next round's labels, so the label frames fold
+    * most-recent-first, one left-outer join each, the first against the
+    * broadcast union-find map. The loop ends because each round the least
+    * neighbour of a component's minimum hooks to it: every component with
+    * an edge loses a vertex.
     */
-  def connectedComponentsDiag(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25,
-      localFinishEdges: Long = 500000L): (org.apache.spark.sql.DataFrame, Int, Seq[Long]) = {
-    // no distinct here: duplicate edges are harmless to min-aggregation and
-    // the first contraction dedupes anyway — a full 2|E| shuffle saved.
-    // `und` holds one row per edge; the symmetric view is derived lazily so
-    // the contraction joins run over |E| rows, not 2|E|.
-    var und = edges.select(col("src"), col("dst")).cache()
-    def sym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = sym.groupBy(col("src"))
-      .agg(min(col("dst")).as("nbrMin"))
-      .select(col("src").as("vertex"),
-        least(col("src"), col("nbrMin")).as("component"),
-        lit(0L).as("chg"))
-      .localCheckpoint(true)
-    var parkedLayers = List.empty[org.apache.spark.sql.DataFrame]
-    var checkpoints = List.empty[org.apache.spark.sql.DataFrame]
-    var activeSizes = Vector.empty[Long]
-    var activeEdges = -1L
+  def connectedComponentsDiag(edges: DataFrame, localFinishBytes: Long = LocalFinishBytes)
+      : (DataFrame, Int, Seq[Long]) = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    var checkpoints = List.empty[DataFrame]
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      checkpoints ::= c
+      c
+    }
+    // A checkpoint keeps its source plan's size estimate and each jump's
+    // self-join squares it: after ~20 jumps the planner's BigInteger
+    // products stall for minutes. Re-wrapping the rows drops the estimate;
+    // round 0 has no jumps and keeps its plain checkpoints.
+    def fresh(df: DataFrame): DataFrame = {
+      val c = checkpoint(df)
+      spark.createDataFrame(c.rdd, c.schema)
+    }
 
-    // quotient the edges by the current labels; counts FIRST so the bounded
-    // regimes below are known before any |V|-sized work happens (guide §3.1
-    // — size estimates on checkpointed frames are unknown, so the planner
-    // cannot pick broadcast strategies on its own)
-    def contract(): Unit = {
+    var g = edges.select(col("src"), col("dst"))
+    var rounds = List.empty[DataFrame]  // label frames, most recent first
+    var sizes = Vector.empty[Long]
+    var jumps = 0
+    var finish = Option.empty[DataFrame]  // union-find map of the last quotient
+    while (finish.isEmpty) {
+      val hook = g.union(g.select(col("dst").as("src"), col("src").as("dst")))
+        .groupBy(col("src")).agg(min(col("dst")).as("nbr"))
+        .select(col("src").as("vertex"), least(col("src"), col("nbr")).as("component"))
+      val labels = if (rounds.isEmpty) checkpoint(hook) else {
+        val seen = Observation()
+        var l = fresh(hook.observe(seen, count(lit(1)).as("n")))
+        sizes :+= seen.get("n").asInstanceOf[Long]
+        var moved = true
+        while (moved) {
+          val root = l.select(col("vertex").as("jv"), col("component").as("jc"))
+          val pass = Observation()
+          l = fresh(l.join(root, col("component") === col("jv"))
+            .observe(pass, max(col("jc") =!= col("component")).as("moved"))
+            .select(col("vertex"), col("jc").as("component")))
+          moved = pass.get("moved") == true
+          jumps += 1
+        }
+        l
+      }
+      rounds ::= labels
       val l1 = labels.select(col("vertex").as("v1"), col("component").as("c1"))
       val l2 = labels.select(col("vertex").as("v2"), col("component").as("c2"))
-      val contracted = und.join(l1, und("src") === col("v1"))
-        .join(l2, und("dst") === col("v2"))
+      val quotient = Observation()
+      g = checkpoint(g.join(l1, col("src") === col("v1"))
+        .join(l2, col("dst") === col("v2"))
         .filter(col("c1") =!= col("c2"))
         .select(col("c1").as("src"), col("c2").as("dst"))
-        .distinct().localCheckpoint(true)
-      und.unpersist()
-      und = contracted
-      checkpoints ::= contracted
-      activeEdges = contracted.count()
-    }
-
-    // park vertices that left the contracted graph, shrink the active
-    // labels frame to the survivors
-    def park(): Unit = {
-      val activeV0 = und.select(col("src").as("vertex"))
-        .union(und.select(col("dst").as("vertex"))).distinct()
-      // when the quotient is inside the bounded local-finish regime the
-      // active-vertex set is provably tiny (≤ 2·|quotient|): broadcast the
-      // membership join instead of shuffling the full |V| labels frame
-      val activeV = if (activeEdges <= localFinishEdges) broadcast(activeV0) else activeV0
-      // one materialization of the flag join; parked/kept are cheap filters
-      val flagged = labels.join(activeV.withColumn("_a", lit(1)), Seq("vertex"), "left_outer")
-        .localCheckpoint(true)
-      checkpoints ::= flagged
-      val parked = flagged.filter(col("_a").isNull)
-        .select(col("vertex"), col("component"))
-      val kept = flagged.filter(col("_a").isNotNull)
-        .select(col("vertex"), col("component"), col("chg"))
-      labels.unpersist()
-      if (!parked.isEmpty) parkedLayers ::= parked
-      labels = kept
-      activeSizes :+= kept.count()
-    }
-
-    def contractAndPark(): Unit = { contract(); park() }
-
-    /** Driver union-find over the current (bounded) quotient edge list:
-      * (root map, distinct quotient vertices in first-seen order). */
-    def quotientUnionFind(): (scala.collection.mutable.HashMap[String, String], Vector[String]) = {
-      val rows = und.select(col("src"), col("dst")).collect()
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      rows.foreach { e =>
-        val (ra, rb) = (find(e.getString(0)), find(e.getString(1)))
-        // union by min keeps every root at its component minimum
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val verts = rows.iterator
-        .flatMap(e => Iterator(e.getString(0), e.getString(1))).distinct.toVector
-      val roots = scala.collection.mutable.HashMap.empty[String, String]
-      verts.foreach(v => roots(v) = find(v))
-      (roots, verts)
-    }
-
-    // driver-side union-find over the (bounded) residual quotient graph;
-    // replaces labels with the final active labels and ends the iteration
-    def finishLocally(): Boolean = {
-      if (activeEdges == 0L || activeEdges > localFinishEdges) false
-      else {
-        val (roots, verts) = quotientUnionFind()
-        val sp = edges.sparkSession
-        import sp.implicits._
-        labels.unpersist()
-        labels = verts.map(v => (v, roots(v))).toDF("vertex", "component")
-        true
+        .distinct()
+        .observe(quotient, count(lit(1)).as("edges"), coalesce(
+          sum(octet_length(col("src")) + octet_length(col("dst"))), lit(0L)).as("chars")))
+      val q = quotient.get
+      val bytes = q("edges").asInstanceOf[Long] * EdgeBytes + q("chars").asInstanceOf[Long]
+      if (bytes <= localFinishBytes) {
+        val roots = unionFind(g.collect())
+        sizes :+= roots.size.toLong
+        finish = Some(roots.toSeq.toDF("rv", "rc"))
       }
     }
 
-    // star graphs converge at seed time: contract immediately so the
-    // iterate phase never touches their labels or edges at all
-    contract()
+    def resolve(labels: DataFrame, m: DataFrame): DataFrame =
+      labels.join(m, col("component") === col("rv"), "left_outer")
+        .select(col("vertex"), coalesce(col("rc"), col("component")).as("component"))
+    val out = rounds.tail
+      .foldLeft(resolve(rounds.head, broadcast(finish.get)))((f, l) => resolve(l, f.toDF("rv", "rc")))
+      .localCheckpoint(true)
+    // Dataset.unpersist frees nothing behind a checkpoint: free its RDD
+    checkpoints.foreach(_.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    })
+    (out, jumps, sizes)
+  }
 
-    // Round-7 fast finish at the FIRST contraction (guide §2.4 — remove
-    // whole passes): when the seed quotient is empty or already inside the
-    // bounded local-finish regime, the flag-join / parking / kept-count /
-    // layer-resolution machinery (three full |V|-row passes plus a |V|-row
-    // checkpoint) collapses into at most ONE broadcast map-join over the
-    // seed labels. Correctness: any vertex's seed label c = least(v,
-    // minNbr(v)) is itself a vertex one hop away, so either cluster-c has
-    // a crossing edge (then c is a quotient node and the edge (v, c) makes
-    // find(c) = find(v)), or cluster-c has none (then the component IS
-    // cluster-c, flat at its minimum c) — the same invariant the parking
-    // path relies on, applied to every vertex at once. The general
-    // distributed path below is untouched for quotients above the bound
-    // (and for localFinishEdges = 0, which the adversarial tests use).
-    if (activeEdges == 0L) {
-      activeSizes :+= 0L
-      val out = labels.select(col("vertex"), col("component")).localCheckpoint(true)
-      checkpoints.foreach(_.unpersist())
-      labels.unpersist()
-      und.unpersist()
-      return (out, 0, activeSizes)
+  /** Driver union-find over a quotient's edges: every vertex's root, the
+    * least vertex of its component. */
+  private def unionFind(rows: Array[Row]): collection.Map[String, String] = {
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
     }
-    if (activeEdges <= localFinishEdges) {
-      val (roots, verts) = quotientUnionFind()
-      activeSizes :+= verts.size.toLong
-      val sp = edges.sparkSession
-      import sp.implicits._
-      val m = verts.map(v => (v, roots(v))).toDF("rv", "rc")
-      val resolvedAll = labels
-        .join(broadcast(m), labels("component") === col("rv"), "left_outer")
-        .select(labels("vertex"),
-          coalesce(col("rc"), labels("component")).as("component"))
-      val out = resolvedAll.localCheckpoint(true)
-      checkpoints.foreach(_.unpersist())
-      labels.unpersist()
-      und.unpersist()
-      return (out, 0, activeSizes)
+    rows.foreach { e =>
+      val (ra, rb) = (find(e.getString(0)), find(e.getString(1)))
+      // union by min keeps every root at its component minimum
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    park()
-
-    // the early returns above leave a quotient above the local-finish bound
-    // whose endpoints are seed labels, hence kept vertices: round one runs
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val prev = labels
-      val s = sym
-      val next = s.join(labels, s("dst") === labels("vertex"))
-        .groupBy(s("src").as("vertex"))
-        .agg(min(col("component")).as("nbrMin"))
-      val propagated = labels.drop("chg").join(next, Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          least(col("component"), coalesce(col("nbrMin"), col("component"))).as("component"),
-          (col("nbrMin") < col("component")).cast("long").as("chg"))
-      // pointer jumping: component := component(component). Halves the
-      // rounds on chain-shaped components (propagation alone needs
-      // O(diameter) rounds; with jumping the reach doubles per round).
-      val jumped = propagated.as("l")
-        .join(propagated.select(col("vertex").as("jv"), col("component").as("jc")).as("r"),
-          col("l.component") === col("jv"), "left_outer")
-        .select(col("l.vertex").as("vertex"),
-          least(col("l.component"), coalesce(col("jc"), col("l.component"))).as("component"),
-          greatest(col("l.chg"),
-            (coalesce(col("jc"), col("l.component")) < col("l.component")).cast("long")).as("chg"))
-      // one action per round (the sum below populates the cache);
-      // localCheckpoint every 3rd round truncates lineage
-      labels =
-        if (i % 3 == 2) jumped.localCheckpoint(true)
-        else jumped.cache()
-      changed = labels.agg(sum(col("chg"))).collect()(0) match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-      prev.unpersist()
-      if (changed > 0 && i % 2 == 1) {
-        contractAndPark()
-        if (finishLocally()) changed = 0
-      }
-      i += 1
-    }
-    und.unpersist()
-
-    // resolution: fold parked layers, most recently parked first. The join
-    // target `m` at every step holds only vertices that were still ACTIVE
-    // after the first contraction (final labels + layers parked later; the
-    // first-parked layer — the big one on star-shaped graphs — is folded
-    // LAST, so its output never feeds a later join target). Hence
-    // activeSizes.head bounds |m|, and when that bound is small the layer
-    // join broadcasts `m` instead of shuffling+sorting the parked frame
-    // (up to ~|V| rows) through a sort-merge join (guide §3.1).
-    val mBounded = activeSizes.headOption.exists(_ <= 500000L)
-    var resolved = labels.select(col("vertex"), col("component"))
-    parkedLayers.foreach { layer =>
-      val m0 = resolved.select(col("vertex").as("rv"), col("component").as("rc"))
-      val m = if (mBounded) broadcast(m0) else m0
-      val r = layer.join(m, layer("component") === col("rv"), "left_outer")
-        .select(layer("vertex"),
-          coalesce(col("rc"), layer("component")).as("component"))
-      resolved = resolved.unionByName(r)
-    }
-    // materialize once, then free every intermediate checkpoint — repeated
-    // in-session runs (bench medians) must not accumulate block-manager state
-    val out = resolved.localCheckpoint(true)
-    checkpoints.foreach(_.unpersist())
-    labels.unpersist()
-    (out, i, activeSizes)
+    val roots = scala.collection.mutable.HashMap.empty[String, String]
+    rows.foreach { e => Seq(e.getString(0), e.getString(1)).foreach(v => roots(v) = find(v)) }
+    roots
   }
 }

@@ -387,10 +387,11 @@ object KgQueries {
 
     // G12: distributed connected components over the entity-alias graph, at
     // adversarial scale (round-2 VERDICT next #10): ~10⁶ edges — one giant
-    // skewed star (300k spokes on a single hub), one 4096-node chain whose
-    // diameter exercises pointer jumping (rounds ≈ log₂(diameter), pinned in
-    // PipelineSpec), 70k small stars, plus the real lexicon alias edges. The
-    // oracle derives every component arithmetically in SQL.
+    // skewed star (300k spokes on a single hub), one 4096-node chain, 70k
+    // small stars, plus the real lexicon alias edges. The stars collapse in
+    // the first hook; the chain's ~4k-edge quotient is what the driver
+    // union-find finishes (jump passes on chains are pinned in PipelineSpec).
+    // The oracle derives every component arithmetically in SQL.
     "kg_alias_components" -> ((s, _) => {
       import s.implicits._
       val giant = s.range(1, 300001)

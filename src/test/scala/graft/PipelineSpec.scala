@@ -2,10 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.kg.{KgPipeline, StageStore}
+import graft.kg.{AliasResolution, KgPipeline, StageStore}
 
 /** Spark-level pipeline tests: checkpoint/resume equivalence (north rule)
   * and lineage rows. */
@@ -90,17 +95,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(KgPipeline.saltedRepartition(hot, 8, saltBuckets = 8).count() == 400)
   }
 
-  test("pointer jumping keeps rounds logarithmic in the component diameter") {
-    import spark.implicits._
-    // 1024-node chain: propagation alone needs ~1024 rounds; with pointer
-    // jumping the reach doubles per round → ≤ log2(1023) + 2 = 12
+  test("jump passes stay logarithmic in the component diameter") {
+    // 1024-node chain: hooking alone needs ~1024 rounds; with pointer
+    // jumping the reach doubles per pass → ≤ log2(1023) + 2 = 12 passes
     val chain = spark.range(0, 1023)
       .select(format_string("c%04d", col("id")).as("src"),
         format_string("c%04d", col("id") + 1).as("dst"))
-    // localFinishEdges=0 disables the driver union-find so the distributed
-    // propagate/jump path is what's measured
-    val (labels, rounds, _) = graft.kg.AliasResolution.connectedComponentsDiag(
-      chain, localFinishEdges = 0L)
+    // a 0-byte gate disables the driver union-find so the distributed
+    // hook/jump path is what's measured
+    val (labels, rounds, _) = AliasResolution.connectedComponentsDiag(chain, localFinishBytes = 0L)
     assert(labels.select("component").distinct().count() == 1)
     assert(rounds <= 12, s"rounds=$rounds for diameter 1023")
   }
@@ -115,39 +118,101 @@ class PipelineSpec extends AnyFunSuite {
     star.union(chain)
   }
 
-  test("label parking: active frame shrinks monotonically and stars park at seed") {
+  /** An n-vertex path visiting v00000 … v{n-1} in a seeded random order. */
+  private def shuffledChain(n: Int) = {
     import spark.implicits._
-    // the star must park at the first contraction, so the iterate phase
-    // only ever shuffles the chain core
-    val (labels, _, sizes) = graft.kg.AliasResolution.connectedComponentsDiag(
-      starAndChain, localFinishEdges = 0L)
+    new scala.util.Random(7).shuffle((0 until n).map(i => f"v$i%05d")).sliding(2)
+      .map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
+  }
+
+  private def labelMap(labels: DataFrame) =
+    labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("quotients shrink monotonically; stars collapse in round 0") {
+    // the star must leave the graph at the first contraction, so the later
+    // rounds only ever shuffle the chain core
+    val (labels, _, sizes) =
+      AliasResolution.connectedComponentsDiag(starAndChain, localFinishBytes = 0L)
     assert(sizes.nonEmpty)
     assert(sizes.head < 200,
-      s"star vertices must park at the seed contraction; active size ${sizes.head}")
-    assert(sizes == sizes.sorted.reverse, s"active frame grew: $sizes")
-    // parked labels still resolve to the true component minima
-    val comps = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      s"star vertices must leave at the seed contraction; quotient size ${sizes.head}")
+    assert(sizes == sizes.sorted.reverse, s"quotient grew: $sizes")
+    // labels that left early still resolve to the true component minima
+    val comps = labelMap(labels)
     assert(comps.size == 10065)
     assert(comps("g09999") == "g00000" && comps("g00000") == "g00000")
     assert(comps("h00063") == "h00000" && comps("h00031") == "h00000")
   }
 
   test("in-loop local finish gives the distributed path's labels") {
-    // the label-parking graph with an 8-edge bound: the seed quotient (62
-    // chain edges) is above it, so the distributed loop runs until a later
-    // contraction fits and the driver union-find ends it early
+    // a shuffled chain keeps a quotient round after round; under a 24 KB
+    // gate a later quotient is collected and the driver union-find ends
+    // the loop early. The wall-time bound catches per-jump size estimates
+    // that compound across checkpoints, which stall planning for minutes.
+    val chain = shuffledChain(3000)
     def run(bound: Long) = {
-      val (labels, rounds, sizes) = graft.kg.AliasResolution.connectedComponentsDiag(
-        starAndChain, localFinishEdges = bound)
-      (labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap, rounds, sizes)
+      val (labels, rounds, sizes) =
+        AliasResolution.connectedComponentsDiag(chain, localFinishBytes = bound)
+      (labelMap(labels), rounds, sizes)
     }
-    val (distributed, distRounds, _) = run(0L)
-    val (finished, rounds, sizes) = run(8L)
+    val (distributed, distRounds, _) = Await.result(Future(run(0L)), 90.seconds)
+    val (finished, rounds, sizes) = run(24L << 10)
     assert(sizes.size >= 2, s"no in-loop contraction: $sizes")
-    assert(sizes == sizes.sorted.reverse, s"active frame grew: $sizes")
+    assert(sizes == sizes.sorted.reverse, s"quotient grew: $sizes")
     assert(rounds < distRounds,
-      s"local finish did not end the loop: $rounds rounds vs $distRounds distributed")
+      s"local finish did not end the loop: $rounds jump passes vs $distRounds distributed")
     assert(finished == distributed)
+    assert(distributed.size == 3000 && distributed.values.toSet == Set("v00000"))
+  }
+
+  test("the driver collect is gated on bytes, not edges") {
+    import spark.implicits._
+    // a 40-edge sorted chain: its seed quotient has 39 edges, which any
+    // row bound collects; with 4 KB names they estimate ~320 KB, so a 64 KB
+    // gate sends them through a distributed round, while short names fit
+    def chain(pad: Int) = (0 until 40)
+      .map(i => (f"n$i%02d" + "x" * pad, f"n${i + 1}%02d" + "x" * pad)).toDF("src", "dst")
+    val gate = 64L << 10
+    val (long, longRounds, longSizes) =
+      AliasResolution.connectedComponentsDiag(chain(4096), localFinishBytes = gate)
+    assert(longRounds > 0 && longSizes == Seq(40L, 0L), s"$longRounds jumps, sizes $longSizes")
+    val comps = labelMap(long)
+    assert(comps.size == 41 && comps.values.toSet == Set("n00" + "x" * 4096))
+    val (short, shortRounds, shortSizes) =
+      AliasResolution.connectedComponentsDiag(chain(0), localFinishBytes = gate)
+    assert(shortRounds == 0 && shortSizes == Seq(40L), s"$shortRounds jumps, sizes $shortSizes")
+    assert(labelMap(short).values.toSet == Set("n00"))
+  }
+
+  test("a gate-0 alias run leaves only its output persisted") {
+    // Dataset.unpersist frees nothing behind a localCheckpoint, so the
+    // intermediate checkpoints must be released through their RDDs
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val (labels, rounds, _) =
+      AliasResolution.connectedComponentsDiag(starAndChain, localFinishBytes = 0L)
+    assert(rounds > 0 && labels.count() == 10065)
+    val grown = sc.getPersistentRDDs.size - before
+    assert(grown <= 1, s"$grown RDDs stay persisted")
+  }
+
+  test("alias labels do not depend on shuffle partitions or AQE") {
+    def labelsUnder(edges: DataFrame, bound: Long) =
+      for (parts <- Seq("1", "200"); aqe <- Seq("true", "false")) yield {
+        val conf = spark.conf
+        val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+          .map(k => k -> conf.get(k))
+        conf.set("spark.sql.shuffle.partitions", parts)
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        try labelMap(AliasResolution.connectedComponentsDiag(edges, localFinishBytes = bound)._1)
+        finally saved.foreach { case (k, v) => conf.set(k, v) }
+      }
+    for ((edges, bound, vertices) <- Seq((shuffledChain(24), 0L, 24),
+        (starAndChain, AliasResolution.LocalFinishBytes, 10065))) {
+      val runs = labelsUnder(edges, bound)
+      assert(runs.head.size == vertices)
+      assert(runs.distinct.size == 1, s"labels differ across ${runs.size} settings")
+    }
   }
 
   test("alias components merge aliases of the same entity") {
@@ -156,7 +221,7 @@ class PipelineSpec extends AnyFunSuite {
       ("google llc", "entity:google"), ("youtube", "entity:google"),
       ("meta", "entity:facebook"), ("instagram", "entity:facebook"))
       .toDF("src", "dst")
-    val comps = graft.kg.AliasResolution.connectedComponents(edges)
+    val comps = AliasResolution.connectedComponents(edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(comps("youtube") == comps("google llc"))
     assert(comps("meta") == comps("instagram"))
