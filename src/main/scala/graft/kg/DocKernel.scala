@@ -289,7 +289,7 @@ object DocKernel {
     * datatype directly. */
   private val ActivityNouns = Map("purchase" -> 1, "order" -> 1, "search" -> 0)
 
-  def annotateActivityRelcl(st: DocState): Unit = {
+  private def annotateActivityRelcl(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         // "your purchases" nominal activities (plus the generic-container
@@ -437,7 +437,7 @@ object DocKernel {
     * is limited ...", "Disclosure of your precise location to advertising
     * networks occurs only with your opt-in". Negated sentences are left
     * alone ("no sale of personal information occurs"). */
-  def annotateNominalizations(st: DocState): Unit = {
+  private def annotateNominalizations(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         if (p.neg.isEmpty) p.chunks.foreach { c =>
@@ -486,7 +486,7 @@ object DocKernel {
     * collected (the negative statement quantifies over everything else).
     * Triggers: aside from / apart from / except for / other than at the
     * clause start, a DATA chunk, a comma, and a negated main clause. */
-  def annotateExceptives(st: DocState): Unit = {
+  private def annotateExceptives(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         val s = p.start
@@ -519,7 +519,7 @@ object DocKernel {
   /** "As for <DT>," topicalization with a retention-signal clause ("As for
     * your browsing history, only aggregate statistics survive our nightly
     * purge") — the topicalized datum is held by the operator. */
-  def annotateTopicalization(st: DocState): Unit = {
+  private def annotateTopicalization(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         val s = p.start
@@ -543,7 +543,7 @@ object DocKernel {
 
   /** Adjectival access predicates: "X is visible/accessible/available to
     * Y" — Y gets to see X. */
-  def annotateAccessPredicates(st: DocState): Unit = {
+  private def annotateAccessPredicates(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         (p.start until p.end - 2).foreach { k =>
@@ -575,7 +575,7 @@ object DocKernel {
     * ubiquitous in FAQ-style policies). */
   private val QaNegAnswer = Set("no", "never", "none", "nothing")
 
-  def annotateQaFragments(st: DocState): Unit = {
+  private def annotateQaFragments(st: DocState): Unit = {
     st.docs.foreach { d =>
       var prev: Option[Parse] = None
       d.parses.foreach { p =>
@@ -640,7 +640,7 @@ object DocKernel {
   /** Subsumption annotator (SURVEY.md U5; reference
     * subsumption_annotator.py patterns: such as / including / like /
     * include-verb / e.g. / for example / especially). */
-  def annotateSubsumption(st: DocState): Unit = {
+  private def annotateSubsumption(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         // prep-based: upper --prep(as|like|include)--> p --obj--> lower
@@ -903,7 +903,7 @@ object DocKernel {
     * coreference_annotator.py:43-97): pronoun / this-NP mentions link to the
     * nearest preceding compatible noun phrase in the same or previous
     * sentence; first match wins. */
-  def annotateCoreference(st: DocState): Unit = {
+  private def annotateCoreference(st: DocState): Unit = {
     st.docs.foreach { d =>
       var prevChunks: Vector[(Parse, Chunk)] = Vector.empty
       // anaphors already resolved in this document: a pronoun inside the
@@ -998,7 +998,7 @@ object DocKernel {
     * ("Identifiers" → identifier) stay real mentions — the policy names
     * them as collected categories. Exemplifier parens ("(including ...)")
     * are NOT taxonomy; nothing fires for them. */
-  def annotateColonTaxonomy(st: DocState): Unit = {
+  private def annotateColonTaxonomy(st: DocState): Unit = {
     st.docs.foreach { d =>
       // the from-side of the most recent colon list ("categories" in
       // "... categories are collected: Label (...); Label (...)")
@@ -1083,7 +1083,7 @@ object DocKernel {
     * calls". The call NP gets a SUBSUM child pointing at the synthetic
     * audio-recording mention, so collection captured on the NP reaches the
     * canonical term and the untyped NP collapses at graph build. */
-  def annotateRecordedMedia(st: DocState): Unit = {
+  private def annotateRecordedMedia(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         def linkAudio(heads: Seq[Int]): Unit = {
@@ -1179,7 +1179,7 @@ object DocKernel {
     * advertising partners, your email address." — a verbless second
     * conjunct of shape [ACTOR NP], [DATA NP...] inherits the previous
     * clause's root verb (the classic legalese ellipsis). */
-  def annotateGapping(st: DocState): Unit = {
+  private def annotateGapping(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.sliding(2).foreach {
         case Vector(p1, p2) =>
@@ -1311,7 +1311,7 @@ object DocKernel {
     "e.g.", "i.e.", "etc", "which", "that", "collectively", "hereinafter",
     "detailed")
 
-  def annotateCollection(st: DocState): Unit = {
+  private def annotateCollection(st: DocState): Unit = {
     st.docs.foreach { d =>
       // discontinued practices: "<statement>; that practice ended in 2024."
       // retracts the preceding sentence's assertions
@@ -1664,7 +1664,7 @@ object DocKernel {
     *     ("Nothing you type in support chats escapes our audit trail") —
     *     the negated escape asserts capture: DATA mentions in the subject
     *     region are collected. */
-  def annotateOovTransmission(st: DocState): Unit = {
+  private def annotateOovTransmission(st: DocState): Unit = {
     val EgressLemmas = Set("escape", "evade", "elude", "dodge", "bypass")
     st.docs.foreach { d =>
       d.parses.foreach { p =>
@@ -1897,7 +1897,7 @@ object DocKernel {
   }
 
   /** Purpose annotator (SURVEY.md U6; purpose_annotator.py:75-207). */
-  def annotatePurpose(st: DocState): Unit = {
+  private def annotatePurpose(st: DocState): Unit = {
     // the reference's TRIVIAL_WORDS (utils.py:9-14) + the domain nouns the
     // purpose validator already ignored — a span of only these words is not
     // a purpose ("for example ...", "for this reason", ...)
@@ -2007,7 +2007,7 @@ object DocKernel {
   }
 
   /** List annotator (SURVEY.md J5; list_annotator.py:11-75). */
-  def annotateList(st: DocState): Unit = {
+  private def annotateList(st: DocState): Unit = {
     val byParent = st.segs.groupBy(_.parentId)
     val docOf: Map[Int, CtxDoc] = st.docs.map(d => d.segId -> d).toMap
     st.segs.filter(_.segType != "LISTITEM").foreach { root =>
@@ -2106,7 +2106,7 @@ object DocKernel {
 
   /** Subject annotator (SURVEY.md U7): children-related sentences mark the
     * DATA side of their COLLECT edges with subject=children. */
-  def annotateSubject(st: DocState): Unit = {
+  private def annotateSubject(st: DocState): Unit = {
     st.docs.foreach { d =>
       d.parses.foreach { p =>
         val childish = (p.start until p.end).exists { k =>

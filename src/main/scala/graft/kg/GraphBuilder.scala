@@ -51,29 +51,31 @@ object GraphBuilder {
   }
 
   /** Plain digraph with cycle-guarded insert (dag_add_edge,
-    * build_graph.py:23-28). */
-  final class Digraph {
-    val adj = mutable.LinkedHashMap[Src, mutable.LinkedHashSet[Src]]()
-    val radj = mutable.LinkedHashMap[Src, mutable.LinkedHashSet[Src]]()
-    def nodes: Iterator[Src] = (adj.keys ++ radj.keys).iterator.distinct
-    def hasNode(n: Src): Boolean = adj.contains(n) || radj.contains(n)
-    def out(n: Src): Seq[Src] = adj.get(n).map(_.toSeq).getOrElse(Nil)
-    def in(n: Src): Seq[Src] = radj.get(n).map(_.toSeq).getOrElse(Nil)
-    def outDegree(n: Src): Int = adj.get(n).map(_.size).getOrElse(0)
-    def inDegree(n: Src): Int = radj.get(n).map(_.size).getOrElse(0)
-    def edgesSeq: Vector[(Src, Src)] =
+    * build_graph.py:23-28), over token srcs (steps 3-6) and over
+    * normalized terms (the final graph of steps 7-9). */
+  final class Digraph[N <: AnyRef] {
+    val adj = mutable.LinkedHashMap[N, mutable.LinkedHashSet[N]]()
+    val radj = mutable.LinkedHashMap[N, mutable.LinkedHashSet[N]]()
+    def nodes: Iterator[N] = (adj.keys ++ radj.keys).iterator.distinct
+    def hasNode(n: N): Boolean = adj.contains(n) || radj.contains(n)
+    def out(n: N): Seq[N] = adj.get(n).map(_.toSeq).getOrElse(Nil)
+    def in(n: N): Seq[N] = radj.get(n).map(_.toSeq).getOrElse(Nil)
+    def outDegree(n: N): Int = adj.get(n).map(_.size).getOrElse(0)
+    def inDegree(n: N): Int = radj.get(n).map(_.size).getOrElse(0)
+    def edgesSeq: Vector[(N, N)] =
       adj.iterator.flatMap { case (u, vs) => vs.map(u -> _) }.toVector
-    def addRaw(u: Src, v: Src): Unit = {
+    def addRaw(u: N, v: N): Unit = {
       adj.getOrElseUpdate(u, mutable.LinkedHashSet()) += v
       radj.getOrElseUpdate(v, mutable.LinkedHashSet()) += u
     }
-    // hasPath is called per edge (transitiveReduce) and per edge PAIR
-    // (reduceCollect): version-stamped scratch structures replace a fresh
-    // Set+Queue per call (kernel allocation hot spot, round-4 pass)
-    private val seenStamp = mutable.AnyRefMap[Src, Int]()
+    // hasPath is called per edge (transitiveReduce), per edge PAIR
+    // (reduceCollect) and per candidate final edge (steps 7+8):
+    // version-stamped scratch structures replace a fresh Set+Queue per call
+    // (kernel allocation hot spot, round-4 pass)
+    private val seenStamp = mutable.AnyRefMap[N, Int]()
     private var stamp = 0
-    private val pathQ = new java.util.ArrayDeque[Src]()
-    def hasPath(a: Src, b: Src): Boolean = {
+    private val pathQ = new java.util.ArrayDeque[N]()
+    def hasPath(a: N, b: N): Boolean = {
       if (a == b) return true
       stamp += 1
       pathQ.clear()
@@ -94,23 +96,23 @@ object GraphBuilder {
       false
     }
     /** add u→v unless u==v or v is an ancestor of u (would form a cycle). */
-    def dagAdd(u: Src, v: Src): Boolean =
+    def dagAdd(u: N, v: N): Boolean =
       if (u == v || (hasNode(u) && hasPath(v, u))) false
       else { addRaw(u, v); true }
-    def removeEdge(u: Src, v: Src): Unit = {
+    def removeEdge(u: N, v: N): Unit = {
       adj.get(u).foreach(_ -= v); radj.get(v).foreach(_ -= u)
     }
-    def removeNode(n: Src): Unit = {
+    def removeNode(n: N): Unit = {
       out(n).toVector.foreach(v => removeEdge(n, v))
       in(n).toVector.foreach(u => removeEdge(u, n))
       adj -= n; radj -= n
     }
-    def topo: Vector[Src] = {
-      val indeg = mutable.Map[Src, Int]().withDefaultValue(0)
+    def topo: Vector[N] = {
+      val indeg = mutable.Map[N, Int]().withDefaultValue(0)
       val all = nodes.toVector
       all.foreach(n => indeg(n) = inDegree(n))
       val q = mutable.Queue(all.filter(indeg(_) == 0): _*)
-      val out0 = Vector.newBuilder[Src]
+      val out0 = Vector.newBuilder[N]
       while (q.nonEmpty) {
         val x = q.dequeue(); out0 += x
         out(x).foreach { y => indeg(y) -= 1; if (indeg(y) == 0) q.enqueue(y) }
@@ -127,26 +129,8 @@ object GraphBuilder {
     * phrase sets — identical to inline whenever the classifier is total
     * (every phrase gets ≥1 label; BatchScoringSpec pins this on the corpus),
     * and divergent only for phrases that classify to zero labels, which the
-    * reference drops from purpose dicts before its reduction.
-    *
-    * [[BuildProbe]] is the dev probe for per-step allocation attribution
-    * inside [[build]] (used by ScaleProbe; zero overhead when disabled). */
-  object BuildProbe {
-    @volatile var enabled = false
-    val acc = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    private val tmx = java.lang.management.ManagementFactory.getThreadMXBean
-      .asInstanceOf[com.sun.management.ThreadMXBean]
-    private val last = new ThreadLocal[Long] { override def initialValue(): Long = 0L }
-    def start(): Unit = if (enabled) last.set(tmx.getThreadAllocatedBytes(Thread.currentThread().getId))
-    def mark(label: String): Unit = if (enabled) {
-      val now = tmx.getThreadAllocatedBytes(Thread.currentThread().getId)
-      acc.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder).add(now - last.get)
-      last.set(now)
-    }
-  }
-
+    * reference drops from purpose dicts before its reduction. */
   def build(st: DocState, variant: String, deferPurposes: Boolean = false): Vector[Triple] = {
-    BuildProbe.start()
     // Node discovery in edge-insertion order (deterministic: annotator order)
     val nodeOrder: Vector[Src] = {
       val seen = mutable.LinkedHashSet[Src]()
@@ -162,7 +146,6 @@ object GraphBuilder {
     }
     def setdefault(s: Src, t: String): String = tokenType.getOrElseUpdate(s, t)
 
-    BuildProbe.mark("s1_types")
     // ---- Step 2: collect graph + purposes ------------------------------
     val gCollect = new MultiDigraph
     val dtypePurposeTexts = mutable.LinkedHashMap[Src, mutable.ListBuffer[String]]()
@@ -202,10 +185,9 @@ object GraphBuilder {
       gCollect.inE(dt).foreach(e => gCollect.purposes(e) = edgePurposes)
     }
 
-    BuildProbe.mark("s2_collect")
     // ---- Step 3: subsum/coref BFS with type propagation ----------------
-    val gSubsum = new Digraph
-    val gCoref = new Digraph
+    val gSubsum = new Digraph[Src]
+    val gCoref = new Digraph[Src]
     // seed without the two intermediate toSeq copies (same iteration order)
     val queue = mutable.Queue.empty[Src]
     val visited = mutable.Set.empty[Src]
@@ -224,7 +206,6 @@ object GraphBuilder {
       }
     }
 
-    BuildProbe.mark("s3_bfs")
     // ---- Step 4: coref contraction (skipped in the per_sentence
     // PolicyLint simulation, build_graph.py:177-178). The absorbed src's
     // sentence must keep citing the edges it contributed to (the reference
@@ -248,12 +229,10 @@ object GraphBuilder {
       }
     }
 
-    BuildProbe.mark("s4_contract")
     // ---- Step 5: transitive reduction + collect-edge reduction ----------
     transitiveReduce(gSubsum)
     reduceCollect(gCollect, gSubsum, tokenType)
 
-    BuildProbe.mark("s5_reduce")
     // ---- Step 6: phrase normalization ------------------------------------
     val termsOf = mutable.LinkedHashMap[Src, Vector[String]]()
     val nodeTypeOf = mutable.LinkedHashMap[String, String]()
@@ -292,46 +271,13 @@ object GraphBuilder {
     }
     def terms(s: Src): Vector[String] = termsOf.getOrElse(s, Vector.empty)
 
-    BuildProbe.mark("s6_normalize")
     // ---- Steps 7+8: merge into the final term graph ----------------------
     val finalEdges = mutable.LinkedHashMap[(String, String, String), (mutable.ListBuffer[Src], mutable.LinkedHashMap[String, mutable.ListBuffer[String]])]()
-    val finalAdj = mutable.Map[String, mutable.Set[String]]() // cycle guard view
-
-    // version-stamped scratch (same trick as Digraph.hasPath): this runs
-    // once per candidate final edge, and the fresh Set+Queue per call was
-    // a measurable slice of the merge step's allocation
-    val fhpSeen = mutable.AnyRefMap[String, Int]()
-    var fhpStamp = 0
-    val fhpQ = new java.util.ArrayDeque[String]()
-    def finalHasPath(a: String, b: String): Boolean = {
-      if (a == b) return true
-      fhpStamp += 1
-      fhpQ.clear()
-      fhpSeen(a) = fhpStamp
-      fhpQ.add(a)
-      while (!fhpQ.isEmpty) {
-        val x = fhpQ.poll()
-        val vs = finalAdj.getOrElse(x, null)
-        if (vs != null) {
-          val it = vs.iterator
-          while (it.hasNext) {
-            val y = it.next()
-            if (y == b) return true
-            if (fhpSeen.getOrElse(y, 0) != fhpStamp) { fhpSeen(y) = fhpStamp; fhpQ.add(y) }
-          }
-        }
-      }
-      false
-    }
-    def finalDagAdd(n1: String, n2: String, rel: String): Boolean = {
+    val finalG = new Digraph[String] // cycle guard view
+    def finalDagAdd(n1: String, n2: String, rel: String): Unit = {
       val key = (n1, n2, rel)
-      if (finalEdges.contains(key)) true
-      else if (n1 == n2 || finalHasPath(n2, n1)) false
-      else {
+      if (!finalEdges.contains(key) && finalG.dagAdd(n1, n2))
         finalEdges(key) = (mutable.ListBuffer(), mutable.LinkedHashMap())
-        finalAdj.getOrElseUpdate(n1, mutable.Set()) += n2
-        true
-      }
     }
 
     // Step 7: SUBSUM merge
@@ -364,7 +310,6 @@ object GraphBuilder {
       }
     }
 
-    BuildProbe.mark("s78_merge")
     // ---- Step 9 + trim: evidence text, drop SUBSUM islands ---------------
     val important = mutable.Set[String]()
     finalEdges.keys.foreach { case (n1, n2, rel) =>
@@ -375,7 +320,7 @@ object GraphBuilder {
     val q2 = mutable.Queue(important.toSeq: _*)
     while (q2.nonEmpty) {
       val x = q2.dequeue()
-      finalAdj.getOrElse(x, Set.empty).foreach { y =>
+      finalG.out(x).foreach { y =>
         if (!reach.contains(y)) { reach += y; q2.enqueue(y) }
       }
     }
@@ -418,7 +363,6 @@ object GraphBuilder {
       case _ =>
     }
     val out = triples.result().sortBy(t => (t.subj, t.pred, t.obj))
-    BuildProbe.mark("s9_trim")
     out
   }
 
@@ -460,7 +404,7 @@ object GraphBuilder {
   }
 
   /** DAG-preserving contraction (ensure_dag=True flavor). */
-  private def contractDag(g: Digraph, u: Src, v: Src): Unit = {
+  private def contractDag(g: Digraph[Src], u: Src, v: Src): Unit = {
     g.removeEdge(u, v); g.removeEdge(v, u)
     if (g.hasNode(u) && g.hasNode(v) && (g.hasPath(u, v) || g.hasPath(v, u))) {
       g.removeNode(v)
@@ -472,7 +416,7 @@ object GraphBuilder {
   }
 
   /** In-place transitive reduction of a DAG. */
-  private def transitiveReduce(g: Digraph): Unit = {
+  private def transitiveReduce(g: Digraph[Src]): Unit = {
     g.edgesSeq.foreach { case (u, v) =>
       g.removeEdge(u, v)
       if (!g.hasPath(u, v)) g.addRaw(u, v)
@@ -481,7 +425,7 @@ object GraphBuilder {
 
   /** Remove COLLECT edges made redundant by a SUBSUM path with a purpose
     * subset (build_graph.py:201-240 / SO1). */
-  private def reduceCollect(gc: MultiDigraph, gs: Digraph, tokenType: mutable.Map[Src, String]): Unit = {
+  private def reduceCollect(gc: MultiDigraph, gs: Digraph[Src], tokenType: mutable.Map[Src, String]): Unit = {
     val toRemove = mutable.Set[(Src, Src, String)]()
     // round-7 allocation pass: node set built by direct iteration (the old
     // `nodes` helper allocated a Seq per edge) and the pair scan as while
@@ -525,7 +469,7 @@ object GraphBuilder {
 
   /** Splice an un-normalizable subsuming node out of both graphs
     * (build_graph.py:436-460 _eliminate_intermediate_node). */
-  private def eliminateIntermediate(src: Src, tt: String, gc: MultiDigraph, gs: Digraph): Unit = {
+  private def eliminateIntermediate(src: Src, tt: String, gc: MultiDigraph, gs: Digraph[Src]): Unit = {
     if (gc.hasNode(src)) {
       if (tt == "DATA") {
         gc.inE(src).foreach { case e @ (u, _, rel) =>

@@ -82,7 +82,7 @@ object RuleNlp {
   /** Tokenize a text; returns (texts, wsFlags). Hand-rolled scanner over the
     * grammar `e.g.|i.e.|word(['-]word)*|\n|punct` — the regex version
     * allocated a Match object per token and dominated the kernel's
-    * allocation profile (see ScaleProbe alloc/doc). */
+    * allocation profile. */
   def tokenize(text: String): (Vector[String], Vector[Boolean]) = {
     val n = text.length
     val toks = Vector.newBuilder[String]
@@ -701,27 +701,8 @@ object RuleNlp {
       toMarked: Boolean, // "to <verb>"
       toTok: Int) // index of the "to" particle, -1 if none
 
-  /** Dev-only allocation probe for parseSentence's sections (the
-    * GraphBuilder.BuildProbe pattern) — zero overhead when disabled;
-    * driven by ScaleProbe. */
-  object ParseProbe {
-    @volatile var enabled = false
-    val acc = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    private lazy val tmx = java.lang.management.ManagementFactory.getThreadMXBean
-      .asInstanceOf[com.sun.management.ThreadMXBean]
-    def mark(): Long =
-      if (enabled) tmx.getThreadAllocatedBytes(Thread.currentThread().getId) else 0L
-    def rec(label: String, from: Long): Long =
-      if (enabled) {
-        val now = tmx.getThreadAllocatedBytes(Thread.currentThread().getId)
-        acc.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder).add(now - from)
-        now
-      } else 0L
-  }
-
   /** Build the normalized per-sentence dependency graph. */
   def parseSentence(toks: Vector[Tok], start: Int, end: Int): Parse = {
-    var pm = ParseProbe.mark()
     // a sentence with no finite verb restores a demoted verb candidate
     // ("Face-matching runs against the photos in your gallery"): the
     // plural-noun misreading only holds when another verb carries the
@@ -912,7 +893,6 @@ object RuleNlp {
       if (q >= 0) Some(chunks(q)) else None
     }
 
-    pm = ParseProbe.rec("p1_pre", pm)
     // --- verb groups ---------------------------------------------------
     val vgs = new ArrayBuffer[VGroup]
     var i = start
@@ -952,7 +932,6 @@ object RuleNlp {
       i += 1
     }
 
-    pm = ParseProbe.rec("p2_vgroups", pm)
     // --- clause structure ----------------------------------------------
     // For each verb group: classify as root / conj-of-previous / xcomp /
     // ccomp / relcl, then attach subject.
@@ -1519,8 +1498,6 @@ object RuleNlp {
       attachRight(toks, chunks, start, end, v, regionEnd, vg, deps, neg, subjOf, objOf, conjChunkHeads)
     }
 
-    pm = ParseProbe.rec("p3_clause", pm)
-
     // --- rare-block trigger flags (round-6 allocation pass): one primitive
     // pass over the sentence; each gated block's own FIRST condition implies
     // its flag, so gating cannot change behavior — it only skips the
@@ -1917,7 +1894,6 @@ object RuleNlp {
       }
     }
 
-    pm = ParseProbe.rec("p4_rewrite1", pm)
     // --- comparative correlative, fronted object: ", the more search
     // terms our index hoards" — the clause after the comma is OSV; a
     // clause-final verb with a subject but no object takes the NP right
@@ -2246,7 +2222,6 @@ object RuleNlp {
       }
     }
 
-    pm = ParseProbe.rec("p5_rewrite2", pm)
     // --- colon appositive: "<clause>: A, B and C" ----------------------
     colonAppos(toks, chunks, start, end, deps)
 
@@ -2276,7 +2251,6 @@ object RuleNlp {
       } else c
     }
 
-    ParseProbe.rec("p6_tail", pm)
     Parse(start, end, toks, chunksOut, depsV, neg.toSet, text,
       vgs.iterator.filter(_.passive).map(_.verb).toSet ++ passiveExtra)
   }

@@ -167,14 +167,7 @@ object HtmlSegmenter {
     * poligrapher/document.py:583-608): `regex` recognizes/strips the bullet,
     * `expected(k)` is the exact prefix the k-th item must start with. */
   private final case class Bullet(regex: scala.util.matching.Regex,
-    expected: Int => String, alpha: Boolean = false)
-
-  /** Alpha bullet families ("a. item" / "B. item") misread prose that
-    * happens to start consecutive sentences with bare capitals ("A cookie
-    * is... B..."). The reference's BulletMatcher accepts 2-item alpha runs
-    * (bug-compatible default); set true to require 3+ consecutive items
-    * before an alpha run converts to a list. */
-  @volatile var strictAlphaBullets: Boolean = false
+    expected: Int => String)
 
   private val CharBullet = "^[*>#-]".r
   private val NumBullet = "^\\W*\\d+\\W".r
@@ -189,12 +182,10 @@ object HtmlSegmenter {
         Bullet(NumBullet, k => if (m.contains("1")) m.replace("1", (k + 1).toString) else m)
       })
       .orElse(LowerBullet.findFirstIn(text).map { m =>
-        Bullet(LowerBullet, k => m.replace("a", ('a' + (k % 26)).toChar.toString),
-          alpha = true)
+        Bullet(LowerBullet, k => m.replace("a", ('a' + (k % 26)).toChar.toString))
       })
       .orElse(UpperBullet.findFirstIn(text).map { m =>
-        Bullet(UpperBullet, k => m.replace("A", ('A' + (k % 26)).toChar.toString),
-          alpha = true)
+        Bullet(UpperBullet, k => m.replace("A", ('A' + (k % 26)).toChar.toString))
       })
 
   /** Turn runs (≥2) of text-bullet TEXT segments that follow a TEXT/HEADING
@@ -259,8 +250,10 @@ object HtmlSegmenter {
           var j = i
           while (j < n && segs(j).segType == "TEXT" && segs(j).parentId == s.parentId &&
             segs(j).text.startsWith(b.expected(j - i))) j += 1
-          val minRun = if (b.alpha && strictAlphaBullets) 3 else 2
-          if (j - i >= minRun) {
+          // 2-item runs convert for alpha families too, as in the
+          // reference: prose starting consecutive sentences with bare
+          // capitals ("A cookie is... B...") reads as a list (bug-compatible)
+          if (j - i >= 2) {
             val introOld = segs(i - 1).segId
             (i until j).foreach { k =>
               val itemNew = outType.length

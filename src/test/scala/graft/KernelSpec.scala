@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.xbean.asm9.ClassReader
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.CorpusGen
@@ -13,6 +14,31 @@ class KernelSpec extends AnyFunSuite {
   private def triples(html: String): Set[(String, String, String)] =
     DocKernel.process("t", HtmlSegmenter.segment("t", html))
       .map(t => (t.subj, t.pred, t.obj)).toSet
+
+  /** Bytecode length of each method (`name + descriptor`), read from its
+    * Code attribute: the walk starts past the constant pool
+    * (`ClassReader.header`) and steps over interfaces, fields and methods. */
+  private def codeSizes(cls: Class[_]): Map[String, Int] = {
+    val in = cls.getResourceAsStream("/" + cls.getName.replace('.', '/') + ".class")
+    val cr = try new ClassReader(in) finally in.close()
+    val buf = new Array[Char](cr.getMaxStringLength)
+    var off = cr.header + 6
+    off += 2 + 2 * cr.readUnsignedShort(off) // interfaces
+    val sizes = Map.newBuilder[String, Int]
+    for (isMethod <- Seq(false, true)) {
+      val n = cr.readUnsignedShort(off); off += 2
+      for (_ <- 0 until n) {
+        val name = cr.readUTF8(off + 2, buf) + cr.readUTF8(off + 4, buf)
+        val attrs = cr.readUnsignedShort(off + 6); off += 8
+        for (_ <- 0 until attrs) {
+          // Code: name u2, length u4, max_stack u2, max_locals u2, code_length u4
+          if (isMethod && cr.readUTF8(off, buf) == "Code") sizes += name -> cr.readInt(off + 10)
+          off += 6 + cr.readInt(off + 2)
+        }
+      }
+    }
+    sizes.result()
+  }
 
   test("smoke page emits the expected triples") {
     val got = triples(
@@ -490,6 +516,17 @@ class KernelSpec extends AnyFunSuite {
     // tough-movement over a non-practice infinitive
     val tm = triples("<p>Your account is easy for you to close.</p>")
     assert(!tm.exists(t => !t._2.startsWith("NOT_")), s"$tm")
+  }
+
+  test("every RuleNlp method stays small enough for the JIT to compile") {
+    // HotSpot never compiles a method over 8,000 bytecode bytes
+    // (-XX:+DontCompileHugeMethods, on by default): it stays interpreted
+    val HugeMethodLimit = 8000
+    val sizes = codeSizes(graft.nlp.RuleNlp.getClass)
+    assert(sizes.keys.exists(_.startsWith("tag(")) && sizes.keys.exists(_.startsWith("parseSentence(")),
+      s"method table not read: ${sizes.keys.toSeq.sorted.take(5)}")
+    val huge = sizes.filter(_._2 > HugeMethodLimit)
+    assert(huge.isEmpty, s"over $HugeMethodLimit bytes: $huge")
   }
 
   test("text cleanup invariants (S5 fixups)") {

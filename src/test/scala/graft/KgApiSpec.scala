@@ -117,22 +117,17 @@ class KgApiSpec extends AnyFunSuite {
     assert(collect("* Email address") == Set("UNSPECIFIED_DATA"))
   }
 
-  test("strict alpha bullets: 2-item prose runs stay TEXT, 3-item lists convert") {
+  test("alpha bullets: 2-item prose runs and 3-item lists both convert") {
     import graft.text.HtmlSegmenter
     val prose = "<p>Our cookie practices:</p>" +
       "<p>A cookie is a small file stored on your device.</p>" +
       "<p>B cookies from partners may also be set.</p>"
     val realList = "<p>We collect the following information:</p>" +
       "<p>a. Email address</p><p>b. Phone number</p><p>c. IP address</p>"
-    // bug-compatible default: 2-item alpha runs convert (reference behavior)
+    // bug-compatible: 2-item alpha runs convert (reference behavior)
     assert(HtmlSegmenter.segment("t", prose).exists(_.segType == "LISTITEM"))
-    try {
-      HtmlSegmenter.strictAlphaBullets = true
-      assert(!HtmlSegmenter.segment("t", prose).exists(_.segType == "LISTITEM"),
-        "prose 'A ... B ...' must stay TEXT under strict alpha bullets")
-      assert(HtmlSegmenter.segment("t", realList)
-        .count(_.segType == "LISTITEM") == 3, "3-item alpha list still converts")
-    } finally HtmlSegmenter.strictAlphaBullets = false
+    assert(HtmlSegmenter.segment("t", realList)
+      .count(_.segType == "LISTITEM") == 3, "3-item alpha list converts")
   }
 
   test("ExtKGraph umbrella: UNSPECIFIED_DATA collectors count for any datatype") {
