@@ -32,21 +32,15 @@ object KgApi {
     // positive multigraph: (u, v) -> edges (pred, texts, purposeLabels)
     val pos: mutable.LinkedHashMap[(String, String), Vector[(String, Seq[String], Seq[String])]] =
       mutable.LinkedHashMap()
-    val negEdges: Vector[(String, String, String, Seq[String])] = {
-      val b = Vector.newBuilder[(String, String, String, Seq[String])]
-      ts.foreach { t =>
-        nodeType.getOrElseUpdate(t.subj, t.subjType)
-        nodeType.getOrElseUpdate(t.obj, t.objType)
-        val (u, v) =
-          if (t.pred == Subsum && t.subjType == "ACTOR") (t.obj, t.subj) // SUBSUM_BY
-          else (t.subj, t.obj)
-        if (!t.pred.startsWith("NOT_"))
-          pos((u, v)) = pos.getOrElse((u, v), Vector.empty) :+
-            ((t.pred, t.text, t.purposes.keys.toVector.sorted))
-        if (t.pred.startsWith("NOT_"))
-          b += ((t.subj, t.pred, t.obj, t.text))
-      }
-      b.result()
+    ts.foreach { t =>
+      nodeType.getOrElseUpdate(t.subj, t.subjType)
+      nodeType.getOrElseUpdate(t.obj, t.objType)
+      val (u, v) =
+        if (t.pred == Subsum && t.subjType == "ACTOR") (t.obj, t.subj) // SUBSUM_BY
+        else (t.subj, t.obj)
+      if (!t.pred.startsWith("NOT_"))
+        pos((u, v)) = pos.getOrElse((u, v), Vector.empty) :+
+          ((t.pred, t.text, t.purposes.keys.toVector.sorted))
     }
     val adj: Map[String, Vector[String]] =
       pos.keys.toVector.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2) }

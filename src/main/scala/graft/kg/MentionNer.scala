@@ -228,15 +228,8 @@ object MentionNer {
   /** span-detector and category models, committed by NerTrain. */
   final case class Models(span: MlpModel, cat: MlpModel)
 
-  lazy val fromResource: Models = {
-    def load(name: String): MlpModel = {
-      val in = getClass.getResourceAsStream(s"/graft/$name")
-      require(in != null, s"missing $name — run graft.nlp.NerTrain")
-      try MlpModel.load(new java.io.DataInputStream(new java.io.BufferedInputStream(in)))
-      finally in.close()
-    }
-    Models(load("ner_span.bin"), load("ner_cat.bin"))
-  }
+  lazy val fromResource: Models =
+    Models(MlpModel.loadResource("ner_span.bin"), MlpModel.loadResource("ner_cat.bin"))
 
   /** Operating point chosen on CLOSED batches by NerTrain (recorded in
     * COVERAGE.md): the span gate is deliberately conservative — the NER's

@@ -49,7 +49,6 @@ object NerProbe {
       }
     }
     // closed-batch audit: does the NER union add false positives anywhere?
-    val batches = SemTrain.goldDocs.groupBy(_._1.url.split('/').last.take(3))
     Seq(("b1-20", SemTrain.goldDocs)).foreach { case (tag, gold) =>
       val pages = gold.map(_._1)
       val want = gold.flatMap(_._2).toSet
@@ -59,6 +58,5 @@ object NerProbe {
       println(s"AUDIT $tag union fp=${fps.size}")
       fps.take(40).foreach(t => println(s"  FP $t"))
     }
-    val _ = batches // silence unused
   }
 }

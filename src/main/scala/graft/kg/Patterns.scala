@@ -94,290 +94,8 @@ object Patterns {
   val bank: Vector[Pattern] = compile(
     graft.nlp.VerbPatternsYaml.patterns.map(p => (p.root, p.chains, p.transform)))
 
-  /** In-code copy retained for documentation/tests of the DSL compiler. */
-  val bankInline: Vector[Pattern] = compile(Seq(
-    // E1 share DT with E2
-    ("*VERB_SHARE_WITH:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "with,:obj@E2"), Seq("SHARE", "E1", "DT", "E2")),
-    // E1 collect DT from E2
-    ("*VERB_COLLECT_FROM:root|ccomp|xcomp",
-      Seq(":subj@E1", "!:obj@DT", "from,:obj@E2"), Seq("COLLECT", "E1", "DT", "E2")),
-    // E1 provide E2 with DT
-    ("*VERB_PROVIDE_WITH:root|ccomp",
-      Seq(":subj@E1", ":obj@E2", "!with,:obj@DT"), Seq("SHARE", "E1", "DT", "E2")),
-    // E1 provide DT to E2 / dative
-    ("*VERB_PROVIDE_TO:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "to,:obj@E2", ":dative@E3"), Seq("SHARE", "E1", "DT", "E2|E3")),
-    // E1 sell DT to E2
-    ("*VERB_SELL_TO:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "to,:obj@E2", ":dative@E3"), Seq("SELL", "E1", "DT", "E2|E3")),
-    // E1 use DT
-    ("*VERB_USE:root|ccomp|xcomp",
-      Seq(":subj@E1", "!:obj@DT"), Seq("USE", "E1", "DT")),
-    // E1 store DT
-    ("*VERB_STORE:root|ccomp|xcomp",
-      Seq(":subj@E1", "!:obj@DT"), Seq("STORE", "E1", "DT")),
-    // E1 have/get/gain/request access to DT; passive "granted access to"
-    ("have|get|gain|request|grant:root|ccomp",
-      Seq(":subj@E1", "!access:obj,to,:obj@DT"), Seq("USE", "E1", "DT")),
-    // E1 ask for/about DT
-    ("ask:root|ccomp",
-      Seq(":subj@E1", "!for|about,:obj@DT"), Seq("COLLECT", "E1", "DT")),
-    // E1 link/combine/associate X to/with DT (both X and DT are processed)
-    ("link|combine|associate|merge:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "to|with,:obj@X"), Seq("USE", "E1", "DT")),
-    ("link|combine|associate|merge|watermark|stamp:root|ccomp",
-      Seq(":subj@E1", "!to|with,:obj@DT"), Seq("USE", "E1", "DT")),
-    // you consent/agree to the collection/processing of DT (implicit WE)
-    ("consent|agree:root|ccomp",
-      Seq("!to,collection|processing|use|storage|record:obj,of,:obj@DT"),
-      Seq("COLLECT", "WE", "DT")),
-    // E1 make use of DT
-    ("make:root|ccomp",
-      Seq(":subj@E1", "!use:obj", "!of,:obj@DT"), Seq("USE", "E1", "DT")),
-    // E1 ... to build/create/compile a profile (derived data is collected)
-    ("build|create|compile|generate|develop|make:root|ccomp|xcomp",
-      Seq(":subj@E1", "!:obj@DT"), Seq("COLLECT", "E1", "DT")),
-    // E1 require/ask E2 to share DT with E3
-    ("*VERB_REQUIRE_TODO:root|ccomp",
-      Seq(":subj@E1", "*VERB_SHARE_WITH:xcomp|ccomp,:subj@E2",
-        "!*VERB_SHARE_WITH:xcomp|ccomp,:obj@DT",
-        "*VERB_SHARE_WITH:xcomp|ccomp,with,:obj@E3"),
-      Seq("SHARE", "E2", "DT", "E3|E1")),
-    // E1 require/ask E2 to provide E3 with DT
-    ("*VERB_REQUIRE_TODO:root|ccomp",
-      Seq(":subj@E1", "*VERB_PROVIDE_WITH:xcomp|ccomp,:subj@E2",
-        "*VERB_PROVIDE_WITH:xcomp|ccomp,:obj@E3",
-        "!*VERB_PROVIDE_WITH:xcomp|ccomp,with,:obj@DT"),
-      Seq("SHARE", "E2", "DT", "E3|E1")),
-    // E1 require/ask E2 to provide DT to E3
-    ("*VERB_REQUIRE_TODO:root|ccomp",
-      Seq(":subj@E1", "*VERB_PROVIDE_TO:xcomp|ccomp,:subj@E2",
-        "!*VERB_PROVIDE_TO:xcomp|ccomp,:obj@DT",
-        "*VERB_PROVIDE_TO:xcomp|ccomp,to,:obj@E3",
-        "*VERB_PROVIDE_TO:xcomp|ccomp,:dative@E4"),
-      Seq("SHARE", "E2", "DT", "E3|E4|E1")),
-    // ... allow E1 to collect DT from E2
-    ("*VERB_ALLOW_TODO:root|ccomp",
-      Seq("*VERB_COLLECT_FROM:xcomp,:subj@E1", "!*VERB_COLLECT_FROM:xcomp,:obj@DT",
-        "*VERB_COLLECT_FROM:xcomp,from,:obj@E2"),
-      Seq("COLLECT", "E1", "DT", "E2")),
-    // ... allow E1 to share DT with E2
-    ("*VERB_ALLOW_TODO:root|ccomp",
-      Seq("*VERB_SHARE_WITH:xcomp,:subj@E1", "!*VERB_SHARE_WITH:xcomp,:obj@DT",
-        "*VERB_SHARE_WITH:xcomp,with,:obj@E2"),
-      Seq("SHARE", "E1", "DT", "E2")),
-    // ... allow E1 to use DT
-    ("*VERB_ALLOW_TODO:root|ccomp",
-      Seq("*VERB_USE:xcomp,:subj@E1", "!*VERB_USE:xcomp,:obj@DT"),
-      Seq("USE", "E1", "DT")),
-    // ... allow E1 to store DT
-    ("*VERB_ALLOW_TODO:root|ccomp",
-      Seq("*VERB_STORE:xcomp,:subj@E1", "!*VERB_STORE:xcomp,:obj@DT"),
-      Seq("STORE", "E1", "DT")),
-    // E1 have/need to collect DT from E2
-    ("*VERB_HAVE_TODO:root|ccomp",
-      Seq(":subj@E1", "!*VERB_COLLECT_FROM:xcomp,:obj@DT",
-        "*VERB_COLLECT_FROM:xcomp,from,:obj@E2"),
-      Seq("COLLECT", "E1", "DT", "E2")),
-    // E1 have/need to use DT
-    ("*VERB_HAVE_TODO:root|ccomp",
-      Seq(":subj@E1", "!*VERB_USE:xcomp,:obj@DT"), Seq("USE", "E1", "DT")),
-    // E1 have/need to store DT
-    ("*VERB_HAVE_TODO:root|ccomp",
-      Seq(":subj@E1", "!*VERB_STORE:xcomp,:obj@DT"), Seq("STORE", "E1", "DT")),
-    // E1 choose/need to provide E2 with DT
-    ("*VERB_HAVE_TODO:root|ccomp",
-      Seq(":subj@E1", "*VERB_PROVIDE_WITH:xcomp,:obj@E2",
-        "!*VERB_PROVIDE_WITH:xcomp,with,:obj@DT"), Seq("SHARE", "E1", "DT", "E2")),
-    // E1 choose/need to provide DT to E2
-    ("*VERB_HAVE_TODO:root|ccomp",
-      Seq(":subj@E1", "!*VERB_PROVIDE_TO:xcomp,:obj@DT",
-        "*VERB_PROVIDE_TO:xcomp,to,:obj@E2"), Seq("SHARE", "E1", "DT", "E2")),
-    // you choose/set a password
-    ("choose|set:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT"), Seq("SHARE", "E1", "DT")),
-    // DT E1 collect include ...
-    ("include:root|ccomp",
-      Seq(":subj@DT,*VERB_COLLECT_FROM:relcl,:subj@E1"), Seq("COLLECT", "E1", "DT", "X")),
-    ("include:root|ccomp",
-      Seq(":subj@DT,*VERB_USE:relcl,:subj@E1"), Seq("USE", "E1", "DT")),
-    ("include:root|ccomp",
-      Seq(":subj@DT,*VERB_STORE:relcl,:subj@E1"), Seq("STORE", "E1", "DT")),
-    // E1 use ... to collect DT
-    ("*VERB_USE:root|ccomp",
-      Seq(":subj@E1", "!*VERB_COLLECT_FROM:xcomp,:obj@DT"), Seq("COLLECT", "E1", "DT", "X")),
-    // X derived/inferred from E2 (participial or active)
-    ("derive|infer|compute:root|ccomp",
-      Seq(":subj@E1", "!from,:obj@E2"), Seq("COLLECT", "E1", "X", "E2")),
-    // E1 process DT through/via E2 (conduit recipient)
-    ("*VERB_USE:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "!through|via,:obj@E2"), Seq("SHARE", "E1", "DT", "E2")),
-    // E1 use X to remember/store DT
-    ("*VERB_USE:root|ccomp",
-      Seq(":subj@E1", "!*VERB_STORE:xcomp,:obj@DT"), Seq("STORE", "E1", "DT")),
-    // E1 use X to build/create a DT profile
-    ("*VERB_USE:root|ccomp",
-      Seq(":subj@E1", "!build|create|compile|generate:xcomp,:obj@DT"),
-      Seq("COLLECT", "E1", "DT", "X")),
-    // E1 set/place cookies
-    ("set|place:root|ccomp",
-      Seq(":subj@E1", "!cookie:obj@DT"), Seq("STORE", "E1", "DT")),
-    // E1 rely on / fall back to / resort to DT
-    ("rely|fall|resort|depend|feast|nibble|graze|snack:root|ccomp",
-      Seq(":subj@E1", "!on|to|upon|at:prep,:obj@DT"), Seq("USE", "E1", "DT")),
-    // DT persists (retention statement)
-    ("persist:root|ccomp",
-      Seq("!:subj@DT"), Seq("STORE", "WE", "DT")),
-    // DT leaves your device (transmission to the operator)
-    ("leave:root|ccomp",
-      Seq("!:subj@DT", "!device:obj@E2"), Seq("COLLECT", "WE", "DT")),
-    // DT streams/flows to E2
-    ("stream|flow|transfer|convey|go|hop:root|ccomp",
-      Seq("!:subj@DT", "!to:prep,:obj@E2"), Seq("SHARE", "X", "DT", "E2")),
-    // light verb: E1 make/take a copy/recording/scan of DT
-    ("make|take|stash|keep:root|ccomp|xcomp",
-      Seq(":subj@E1", "!copy|record|recording|backup|scan|note:obj,of,:obj@DT"),
-      Seq("STORE", "E1", "DT")),
-    // DT feeds into our systems
-    ("feed|trickle:root|ccomp",
-      Seq("!:subj@DT", "!into:prep,:obj@E2"), Seq("COLLECT", "WE", "DT")),
-    // E1 knows/learns about DT
-    ("know|learn:root|ccomp|relcl",
-      Seq(":subj@E1", "!about,:obj@DT"), Seq("COLLECT", "E1", "DT")),
-    // E1 asks DT directly
-    ("ask:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT"), Seq("COLLECT", "E1", "DT")),
-    // DT accompanies/syncs (middle voice)
-    ("accompany|sync|ride|tag|piggyback|hitchhike:root|ccomp",
-      Seq("!:subj@DT"), Seq("COLLECT", "WE", "DT")),
-    // records bear DT
-    ("bear:root|ccomp",
-      Seq("!:obj@DT"), Seq("STORE", "WE", "DT")),
-    // DT stays/remains/lingers/survives (embedded/retained)
-    ("stay|remain|linger|survive|live|reside|sit|hibernate|camp|marinate|languish|stow|nest|roost|winter|bunk|hole|perch|moonlight|idle|lurk|doze|slumber|bed|overwinter|nestle|lounge|hunker|summer|loiter|bivouac|holiday|nap|curl|shelter|squat|den:root|ccomp",
-      Seq("!:subj|obj@DT"), Seq("STORE", "WE", "DT")),
-    // E1 takes notes/a copy
-    ("take:root|ccomp",
-      Seq(":subj@E1", "!note|copy|recording|scan|backup:obj@DT"),
-      Seq("STORE", "E1", "DT")),
-    // E1 treats DT as <adjective> (possession presupposition)
-    ("treat:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT"), Seq("STORE", "E1", "DT")),
-    // X runs against DT (process-vs-data join)
-    ("run:root|ccomp",
-      Seq(":subj@E1", "!against,:obj@E2"), Seq("COLLECT", "E1", "X", "E2")),
-    // DT informs first-party decisioning
-    ("inform:root|ccomp",
-      Seq("!:subj@DT"), Seq("USE", "WE", "DT")),
-    // DT finds its way into <store>
-    ("find|take:root|ccomp",
-      Seq("!:subj@DT", "!way|shelter|refuge|berth:obj", "into|onto|to|in,:obj@E2"),
-      Seq("COLLECT", "WE", "DT")),
-    // DT reaches/enters/lands/settles — common motion verbs need a
-    // STORE_NOUN destination (round-5 ADVICE medium)
-    ("reach|enter|land|settle:root|ccomp",
-      Seq("!:subj@DT", "!at|on|in|onto|into|to,*STORE_NOUN:obj@E2"),
-      Seq("COLLECT", "WE", "DT")),
-    // ... destination as direct object ("reaches our logs")
-    ("reach|enter|land|settle:root|ccomp",
-      Seq("!:subj@DT", "!*STORE_NOUN:obj@E2"), Seq("COLLECT", "WE", "DT")),
-    // ... destination as the locative pro-form ("lands there")
-    ("reach|enter|land|settle:root|ccomp",
-      Seq("!:subj@DT", "!there:obj"), Seq("COLLECT", "WE", "DT")),
-    // ... unambiguous figurative-ingress members keep the bare subject
-    ("stick|slip|lodge|pile|wash|accumulate|tumble|seep|pour:root|ccomp",
-      Seq("!:subj@DT"), Seq("COLLECT", "WE", "DT")),
-    // DT helps us <verb>
-    ("help|assist:root|ccomp",
-      Seq("!:subj@DT"), Seq("USE", "WE", "DT")),
-    // DT ends up on/in <store>
-    ("end:root|ccomp",
-      Seq("!:subj@DT", "!on|in|onto|into,*STORE_NOUN:obj@E2"),
-      Seq("COLLECT", "WE", "DT")),
-    // DT flows/streams our way
-    ("stream|flow:root|ccomp",
-      Seq("!:subj@DT", "!way:obj"), Seq("COLLECT", "WE", "DT")),
-    // E1 hangs on to DT
-    ("hang:root|ccomp",
-      Seq(":subj@E1", "!on|onto|to,:obj@DT"), Seq("STORE", "E1", "DT")),
-    // E1 gets a peek at / catches wind of DT
-    ("get|catch|take|steal:root|ccomp",
-      Seq(":subj@E1", "!peek|glimpse|look|wind|whiff|sight:obj", "!at|of,:obj@DT"),
-      Seq("USE", "E1", "DT")),
-    // E1 keeps tabs on DT (monitoring light-noun — batch 20)
-    ("keep:root|ccomp",
-      Seq(":subj@E1", "!tab:obj", "!on,:obj@DT"), Seq("USE", "E1", "DT")),
-    // E1 helps themselves to DT
-    ("help:root|ccomp",
-      Seq(":subj@E1", "!themselves:obj", "!to,:obj@DT"),
-      Seq("COLLECT", "E1", "DT")),
-    // DT would leave our <store> (presupposes presence)
-    ("leave:root|ccomp",
-      Seq("!:subj@DT", "!*STORE_NOUN:obj@E2"), Seq("STORE", "WE", "DT")),
-    // DT takes up residence in <store>
-    ("take:root|ccomp",
-      Seq("!:subj@DT", "!residence:obj"), Seq("STORE", "WE", "DT")),
-    // pseudo-cleft ingress focus
-    ("reach|enter|land|stick|slip|settle|lodge|pile|wash|accumulate|tumble|seep|pour:root|ccomp",
-      Seq("!what:subj", "!:obj@DT"), Seq("COLLECT", "WE", "DT")),
-    // light-noun acquisition, PP under the noun
-    ("get|catch|take|steal:root|ccomp",
-      Seq(":subj@E1", "!peek|glimpse|look|wind|whiff|sight:obj,at|of,:obj@DT"),
-      Seq("USE", "E1", "DT")),
-    // DT ages/rotates out of / vanishes from <our store> (egress
-    // presupposes retention)
-    ("age|expire|rotate|vanish|evaporate|scrub|melt|fade:root|ccomp",
-      Seq("!:subj|obj@DT", "!of|from,*STORE_NOUN:obj@E2"),
-      Seq("STORE", "WE", "DT")),
-    // E1 fishes DT out of <our store> (third-party extraction)
-    ("fish|corral:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "!of|from,*STORE_NOUN:obj"),
-      Seq("COLLECT", "E1", "DT")),
-    // E1 dips into <our store> for DT
-    ("dip:root|ccomp",
-      Seq(":subj@E1", "!into,*STORE_NOUN:obj", "!for,:obj@DT"),
-      Seq("COLLECT", "E1", "DT")),
-    // E1 rifles through <our store> for DT
-    ("rifle:root|ccomp",
-      Seq(":subj@E1", "!through,*STORE_NOUN:obj", "!for,:obj@DT"),
-      Seq("COLLECT", "E1", "DT")),
-    // <our store> never surrenders DT (negation-transparent retention)
-    ("surrender|relinquish:root|ccomp",
-      Seq("!*STORE_NOUN:subj", "!:obj@DT"),
-      Seq("STORE", "WE", "DT")),
-    // E1 leaves DT in/with <our store> (deposit reading)
-    ("leave:root|ccomp",
-      Seq(":subj@E1", "!:obj@DT", "!in|with,*STORE_NOUN:obj"),
-      Seq("STORE", "WE", "DT")),
-    // E1 raids <our store> for DT
-    ("raid|tap|plunder|loot|shake|comb|strip-mine|trawl|prospect|pan|winnow:root|ccomp",
-      Seq(":subj@E1", "!*STORE_NOUN:obj", "!for,:obj@DT"),
-      Seq("COLLECT", "E1", "DT")),
-    // E1 makes off with DT from <our store>
-    ("make:root|ccomp",
-      Seq(":subj@E1", "!with,:obj@DT", "!from,*STORE_NOUN:obj"),
-      Seq("COLLECT", "E1", "DT")),
-    // <our store> balloons/swarms with DT
-    ("balloon|swell|bulge|swarm|teem|brim|hum|groan|bristle:root|ccomp",
-      Seq("!*STORE_NOUN:subj", "!with,:obj@DT"),
-      Seq("STORE", "WE", "DT")),
-    // E1 carries DT home
-    ("carry:root|ccomp",
-      Seq(":subj@E1", "!home:obj", "!:obj@DT"),
-      Seq("COLLECT", "E1", "DT")),
-    // E1 drinks in / soaks in DT (in-PP consumption)
-    ("drink|soak:root|ccomp",
-      Seq(":subj@E1", "!in:prep,:obj@DT"), Seq("COLLECT", "E1", "DT")),
-    // DT gathers dust (idle retention)
-    ("gather:root|ccomp",
-      Seq("!:subj@DT", "!dust:obj"), Seq("STORE", "WE", "DT")),
-    // E1 gets/lays their hands on DT
-    ("get|lay:root|ccomp",
-      Seq(":subj@E1", "!hand:obj", "!on,:obj@DT"), Seq("COLLECT", "E1", "DT"))))
-
   /** Root-lemma index: pattern lookup is O(1) per dep edge instead of
-    * scanning all 21 patterns (hot path: called once per sentence). */
+    * scanning every pattern in the bank (hot path: called once per sentence). */
   private lazy val bankByRootLemma: java.util.HashMap[String, Vector[Pattern]] = {
     // java.util.HashMap: getOrDefault is allocation-free (scala Map.get
     // wraps every hit in Some, once per dep edge of every sentence)
@@ -391,16 +109,10 @@ object Patterns {
   /** DFS chain matching over one parsed sentence — semantics mirror the
     * reference matcher: every chain tried from every root candidate, captures
     * stop at a negated node, required chains must complete. */
-  def matchSentence(p: Parse, patterns: Vector[Pattern] = bank): Vector[Match] = {
+  def matchSentence(p: Parse): Vector[Match] = {
     val out = Vector.newBuilder[Match]
     val lemmaOf: Int => String = i => p.tokens(i).lemma
-    val byLemma = if (patterns eq bank) bankByRootLemma else {
-      val m = new java.util.HashMap[String, Vector[Pattern]]()
-      patterns.flatMap(q => q.root.lemmas.map(_ -> q)).groupBy(_._1)
-        .foreach { case (l, ps) => m.put(l, ps.map(_._2)) }
-      m
-    }
-    for (d <- p.deps; pat <- byLemma.getOrDefault(lemmaOf(d.to), noPatterns)) {
+    for (d <- p.deps; pat <- bankByRootLemma.getOrDefault(lemmaOf(d.to), noPatterns)) {
       // root candidates: any edge target whose (lemma, dep) matches
       if (pat.root.matches(lemmaOf(d.to), d.dep)) {
         val v = d.to

@@ -235,10 +235,5 @@ object SemanticScorer {
   }
 
   /** The committed trained model. */
-  lazy val fromResource: MlpModel = {
-    val in = getClass.getResourceAsStream("/graft/sem_mlp.bin")
-    require(in != null, "missing sem_mlp.bin — run graft.nlp.SemTrain")
-    try MlpModel.load(new java.io.DataInputStream(new java.io.BufferedInputStream(in)))
-    finally in.close()
-  }
+  lazy val fromResource: MlpModel = MlpModel.loadResource("sem_mlp.bin")
 }

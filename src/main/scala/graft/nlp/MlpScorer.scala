@@ -1,6 +1,7 @@
 package graft.nlp
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.nio.file.{Files, Path, Paths}
 
 /** Tiny pure-JVM neural text classifier that exercises the production
   * batched-model path end to end (round-2 VERDICT missing #2 / next #7).
@@ -24,79 +25,22 @@ final class MlpModel(
     w1: Array[Float], b1: Array[Float],
     w2: Array[Float], b2: Array[Float]) extends Serializable {
 
-  /** Hashed bag-of-words over the first `dim - labels.size` slots; the
-    * final `labels.size` slots are keyword-lexicon indicator features (the
-    * hybrid design: the net learns the keyword baseline through them and
-    * hand-label corrections through the hashed words). */
-  def features(text: String): Array[Float] = {
-    val v = new Array[Float](dim)
-    val hashDim = dim - labels.size
-    val words = scala.collection.mutable.HashSet.empty[String]
-    text.toLowerCase.split("[^a-z0-9-]+").foreach { w =>
-      if (w.nonEmpty) {
-        words += w
-        v(math.floorMod(scala.util.hashing.MurmurHash3.stringHash(w), hashDim)) += 1f
-        val lem = Lexicon.lemma(w)
-        words += lem
-        if (lem != w)
-          v(math.floorMod(scala.util.hashing.MurmurHash3.stringHash(lem), hashDim)) += 1f
-      }
-    }
-    var k = 0
-    while (k < labels.size) {
-      Lexicon.purposeKeywords.get(labels(k)).foreach { kws =>
-        if (words.exists(kws.contains)) v(hashDim + k) = 1f
-      }
-      k += 1
-    }
-    v
-  }
-
-  /** Forward pass for one batch; the hot loop is a dense matmul. */
-  def forward(texts: Seq[String]): Seq[Array[Double]] = texts.map { t =>
-    val x = features(t)
+  /** Forward pass for one batch of purpose phrases. */
+  def forward(texts: Seq[String]): Seq[Array[Double]] = {
     val h = new Array[Float](hidden)
-    var j = 0
-    while (j < hidden) {
-      var s = b1(j)
-      var i = 0
-      while (i < dim) { if (x(i) != 0f) s += x(i) * w1(i * hidden + j); i += 1 }
-      h(j) = math.max(0f, s)
-      j += 1
-    }
-    val out = new Array[Double](labels.size)
-    var k = 0
-    while (k < labels.size) {
-      var s = b2(k)
-      var j2 = 0
-      while (j2 < hidden) { s += h(j2) * w2(j2 * labels.size + k); j2 += 1 }
-      out(k) = 1.0 / (1.0 + math.exp(-s))
-      k += 1
-    }
-    out
+    texts.map(t => forwardSparseAll(MlpModel.textFeatures(t, dim, labels), h))
   }
 
-  /** Sparse single-example forward returning the sigmoid of logit 0 (the
-    * semantic scorer's models carry a single "collect" label). `h` is a
-    * caller-provided scratch array of length `hidden`. */
-  def forwardSparse(x: Array[(Int, Float)], h: Array[Float]): Double = {
-    var j = 0
-    while (j < hidden) {
-      var s = b1(j)
-      var k = 0
-      while (k < x.length) { val (i, xv) = x(k); s += xv * w1(i * hidden + j); k += 1 }
-      h(j) = math.max(0f, s)
-      j += 1
-    }
-    var s2 = b2(0)
-    var j2 = 0
-    while (j2 < hidden) { s2 += h(j2) * w2(j2 * labels.size); j2 += 1 }
-    1.0 / (1.0 + math.exp(-s2))
-  }
+  /** Sigmoid of logit 0 (the semantic scorer's and the span head's models
+    * carry a single label). `h` is caller-provided scratch of length
+    * `hidden`. */
+  def forwardSparse(x: Array[(Int, Float)], h: Array[Float]): Double =
+    forwardSparseAll(x, h)(0)
 
-  /** Sparse single-example forward over ALL labels (the category head of
-    * the mention NER). `h` is caller-provided scratch of length `hidden`;
-    * returns one sigmoid per label (argmax ≈ the softmax pick). */
+  /** Sparse single-example forward over ALL labels: the one hidden-layer
+    * pass every model runs. `x` holds (feature index, value) pairs in
+    * ascending index order; `h` is caller-provided scratch of length
+    * `hidden`; returns one sigmoid per label (argmax ≈ the softmax pick). */
   def forwardSparseAll(x: Array[(Int, Float)], h: Array[Float]): Array[Double] = {
     var j = 0
     while (j < hidden) {
@@ -123,6 +67,15 @@ final class MlpModel(
     labels.foreach(out.writeUTF)
     Seq(w1, b1, w2, b2).foreach { a => out.writeInt(a.length); a.foreach(out.writeFloat) }
   }
+
+  /** Writes the model to `src/main/resources/graft/<name>` under the
+    * working directory (the trainers' output) and returns that path. */
+  def saveResource(name: String): Path = {
+    val path = Paths.get(s"src/main/resources/graft/$name")
+    val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(path)))
+    try save(out) finally out.close()
+    path
+  }
 }
 
 object MlpModel {
@@ -133,13 +86,111 @@ object MlpModel {
     new MlpModel(dim, hidden, labels, arr(), arr(), arr(), arr())
   }
 
-  /** The committed trained model — loaded once per JVM (the per-executor
-    * session pattern an ONNX runtime uses). */
-  lazy val fromResource: MlpModel = {
-    val in = getClass.getResourceAsStream("/graft/purpose_mlp.bin")
-    require(in != null, "missing purpose_mlp.bin — run graft.nlp.MlpTrain")
-    try load(new DataInputStream(new java.io.BufferedInputStream(in)))
+  /** Loads the committed model `graft/<name>` from the classpath. */
+  def loadResource(name: String): MlpModel = {
+    val in = getClass.getResourceAsStream(s"/graft/$name")
+    require(in != null, s"missing model graft/$name — run its trainer in graft.nlp")
+    try load(new DataInputStream(new BufferedInputStream(in)))
     finally in.close()
+  }
+
+  /** The committed purpose model — loaded once per JVM (the per-executor
+    * session pattern an ONNX runtime uses). */
+  lazy val fromResource: MlpModel = loadResource("purpose_mlp.bin")
+
+  /** Purpose-phrase features, as sparse (index, value) pairs in ascending
+    * index order: a hashed bag-of-words over the first `dim - labels.size`
+    * slots; the final `labels.size` slots are keyword-lexicon indicator
+    * features (the hybrid design: the net learns the keyword baseline
+    * through them and hand-label corrections through the hashed words). */
+  def textFeatures(text: String, dim: Int, labels: Vector[String]): Array[(Int, Float)] = {
+    val v = new Array[Float](dim)
+    val hashDim = dim - labels.size
+    val words = scala.collection.mutable.HashSet.empty[String]
+    text.toLowerCase.split("[^a-z0-9-]+").foreach { w =>
+      if (w.nonEmpty) {
+        words += w
+        v(math.floorMod(scala.util.hashing.MurmurHash3.stringHash(w), hashDim)) += 1f
+        val lem = Lexicon.lemma(w)
+        words += lem
+        if (lem != w)
+          v(math.floorMod(scala.util.hashing.MurmurHash3.stringHash(lem), hashDim)) += 1f
+      }
+    }
+    var k = 0
+    while (k < labels.size) {
+      Lexicon.purposeKeywords.get(labels(k)).foreach { kws =>
+        if (words.exists(kws.contains)) v(hashDim + k) = 1f
+      }
+      k += 1
+    }
+    v.indices.filter(v(_) != 0f).map(i => i -> v(i)).toArray
+  }
+
+  /** Seeded sigmoid SGD over sparse rows `(features, one target per
+    * label)`: the one trainer behind every committed model. Draws the
+    * weight initialisation, then one Fisher-Yates shuffle per epoch, from
+    * `Random(seed)`; the learning rate starts at `lr0` and is multiplied
+    * by `decay` after each epoch. */
+  def train(data: Vector[(Array[(Int, Float)], Array[Float])], dim: Int,
+      hidden: Int, labels: Vector[String], epochs: Int, lr0: Float,
+      decay: Float, seed: Long): MlpModel = {
+    val nl = labels.size
+    val rnd = new scala.util.Random(seed)
+    val w1 = Array.fill(dim * hidden)((rnd.nextFloat() - 0.5f) * 0.1f)
+    val b1 = new Array[Float](hidden)
+    val w2 = Array.fill(hidden * nl)((rnd.nextFloat() - 0.5f) * 0.1f)
+    val b2 = new Array[Float](nl)
+    var lr = lr0
+    val order = Array.range(0, data.size)
+    val h = new Array[Float](hidden)
+    val d = new Array[Float](nl)
+    for (_ <- 1 to epochs) {
+      for (i <- order.indices.reverse.drop(1)) {
+        val j = rnd.nextInt(i + 1)
+        val t = order(i); order(i) = order(j); order(j) = t
+      }
+      order.foreach { ex =>
+        val (x, y) = data(ex)
+        var j = 0
+        while (j < hidden) {
+          var s = b1(j)
+          var k = 0
+          while (k < x.length) { val (i2, xv) = x(k); s += xv * w1(i2 * hidden + j); k += 1 }
+          h(j) = math.max(0f, s)
+          j += 1
+        }
+        var c = 0
+        while (c < nl) {
+          var z = b2(c)
+          var j2 = 0
+          while (j2 < hidden) { z += h(j2) * w2(j2 * nl + c); j2 += 1 }
+          d(c) = (1.0 / (1.0 + math.exp(-z))).toFloat - y(c) // dBCE/dz
+          b2(c) -= lr * d(c)
+          c += 1
+        }
+        j = 0
+        while (j < hidden) {
+          var dh = 0f
+          var c2 = 0
+          while (c2 < nl) {
+            dh += d(c2) * w2(j * nl + c2)
+            w2(j * nl + c2) -= lr * d(c2) * h(j)
+            c2 += 1
+          }
+          if (h(j) > 0f) {
+            var k = 0
+            while (k < x.length) {
+              val (i2, xv) = x(k); w1(i2 * hidden + j) -= lr * dh * xv; k += 1
+            }
+            b1(j) -= lr * dh
+          }
+          j += 1
+        }
+      }
+      lr *= decay
+    }
+    new MlpModel(dim, hidden, labels, w1, b1, w2, b2)
   }
 }
 

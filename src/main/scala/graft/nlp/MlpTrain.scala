@@ -42,79 +42,11 @@ object MlpTrain {
     val data = generated ++
       Vector.fill(8)(PurposeLabels.train).flatten
     val dim = 1024 + labels.size // hashed words + keyword indicators
-    val hidden = 24
-    val nl = labels.size
-    val rnd = new scala.util.Random(42)
-    val w1 = Array.fill(dim * hidden)((rnd.nextFloat() - 0.5f) * 0.1f)
-    val b1 = new Array[Float](hidden)
-    val w2 = Array.fill(hidden * nl)((rnd.nextFloat() - 0.5f) * 0.1f)
-    val b2 = new Array[Float](nl)
-    val model = new MlpModel(dim, hidden, labels, w1, b1, w2, b2)
-
-    // sparse features per example
-    val feats = data.map { case (p, _) =>
-      val v = model.features(p)
-      v.indices.filter(v(_) != 0f).map(i => i -> v(i)).toArray
+    val rows = data.map { case (p, ls) =>
+      (MlpModel.textFeatures(p, dim, labels), labels.map(l => if (ls(l)) 1f else 0f).toArray)
     }
-    val targets = data.map { case (_, ls) =>
-      labels.map(l => if (ls(l)) 1f else 0f).toArray
-    }
-
-    val epochs = 500
-    var lr = 0.08f
-    val order = Array.range(0, data.size)
-    for (ep <- 1 to epochs) {
-      // deterministic shuffle
-      for (i <- order.indices.reverse.drop(1)) {
-        val j = rnd.nextInt(i + 1)
-        val t = order(i); order(i) = order(j); order(j) = t
-      }
-      order.foreach { ex =>
-        val x = feats(ex)
-        val t = targets(ex)
-        // forward
-        val h = new Array[Float](hidden)
-        var j = 0
-        while (j < hidden) {
-          var s = b1(j)
-          x.foreach { case (i, xv) => s += xv * w1(i * hidden + j) }
-          h(j) = math.max(0f, s)
-          j += 1
-        }
-        val d = new Array[Float](nl)
-        var k = 0
-        while (k < nl) {
-          var s = b2(k)
-          var j2 = 0
-          while (j2 < hidden) { s += h(j2) * w2(j2 * nl + k); j2 += 1 }
-          d(k) = (1.0 / (1.0 + math.exp(-s))).toFloat - t(k) // dBCE/dz
-          k += 1
-        }
-        // backward
-        val dh = new Array[Float](hidden)
-        j = 0
-        while (j < hidden) {
-          var s = 0f
-          var k2 = 0
-          while (k2 < nl) {
-            s += d(k2) * w2(j * nl + k2)
-            w2(j * nl + k2) -= lr * d(k2) * h(j)
-            k2 += 1
-          }
-          dh(j) = if (h(j) > 0f) s else 0f
-          j += 1
-        }
-        k = 0
-        while (k < nl) { b2(k) -= lr * d(k); k += 1 }
-        x.foreach { case (i, xv) =>
-          var j3 = 0
-          while (j3 < hidden) { w1(i * hidden + j3) -= lr * dh(j3) * xv; j3 += 1 }
-        }
-        j = 0
-        while (j < hidden) { b1(j) -= lr * dh(j); j += 1 }
-      }
-      lr *= 0.998f
-    }
+    val model = MlpModel.train(rows, dim, hidden = 24, labels = labels, epochs = 500,
+      lr0 = 0.08f, decay = 0.998f, seed = 42L)
 
     // exact-set train accuracy vs the keyword teacher
     val preds = model.forward(data.map(_._1))
@@ -125,10 +57,7 @@ object MlpTrain {
     println(s"MLPTRAIN examples=${data.size} exact-set accuracy=" +
       f"${correct.toDouble / data.size}%.4f")
 
-    val path = java.nio.file.Paths.get("src/main/resources/graft/purpose_mlp.bin")
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      java.nio.file.Files.newOutputStream(path)))
-    try model.save(out) finally out.close()
+    val path = model.saveResource("purpose_mlp.bin")
     println(s"MLPTRAIN wrote $path")
   }
 }

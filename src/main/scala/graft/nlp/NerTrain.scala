@@ -25,69 +25,6 @@ import graft.kg.MentionNer
   * `sbt "runMain graft.nlp.NerTrain"` */
 object NerTrain {
 
-  /** Seeded single/multi-label sigmoid SGD over sparse rows (the SemTrain
-    * loop, generalized to k labels). */
-  def train(data: Vector[(Array[(Int, Float)], Array[Float])], dim: Int,
-      hidden: Int, labels: Vector[String], epochs: Int, lr0: Float,
-      seed: Long): MlpModel = {
-    val nl = labels.size
-    val rnd = new scala.util.Random(seed)
-    val w1 = Array.fill(dim * hidden)((rnd.nextFloat() - 0.5f) * 0.1f)
-    val b1 = new Array[Float](hidden)
-    val w2 = Array.fill(hidden * nl)((rnd.nextFloat() - 0.5f) * 0.1f)
-    val b2 = new Array[Float](nl)
-    var lr = lr0
-    val order = Array.range(0, data.size)
-    val h = new Array[Float](hidden)
-    val d = new Array[Float](nl)
-    for (_ <- 1 to epochs) {
-      for (i <- order.indices.reverse.drop(1)) {
-        val j = rnd.nextInt(i + 1)
-        val t = order(i); order(i) = order(j); order(j) = t
-      }
-      order.foreach { ex =>
-        val (x, y) = data(ex)
-        var j = 0
-        while (j < hidden) {
-          var s = b1(j)
-          var k = 0
-          while (k < x.length) { val (i2, xv) = x(k); s += xv * w1(i2 * hidden + j); k += 1 }
-          h(j) = math.max(0f, s)
-          j += 1
-        }
-        var c = 0
-        while (c < nl) {
-          var z = b2(c)
-          var j2 = 0
-          while (j2 < hidden) { z += h(j2) * w2(j2 * nl + c); j2 += 1 }
-          d(c) = (1.0 / (1.0 + math.exp(-z))).toFloat - y(c)
-          b2(c) -= lr * d(c)
-          c += 1
-        }
-        j = 0
-        while (j < hidden) {
-          var dh = 0f
-          var c2 = 0
-          while (c2 < nl) {
-            dh += d(c2) * w2(j * nl + c2)
-            w2(j * nl + c2) -= lr * d(c2) * h(j)
-            c2 += 1
-          }
-          if (h(j) > 0f) {
-            var k = 0
-            while (k < x.length) {
-              val (i2, xv) = x(k); w1(i2 * hidden + j) -= lr * dh * xv; k += 1
-            }
-            b1(j) -= lr * dh
-          }
-          j += 1
-        }
-      }
-      lr *= 0.997f
-    }
-    new MlpModel(dim, hidden, labels, w1, b1, w2, b2)
-  }
-
   def spanRows(): Vector[(Array[(Int, Float)], Array[Float])] = {
     val pages = SemTrain.goldDocs.map(_._1) ++
       graft.gen.CorpusGen.corpus(150, 7L).filter(_.page.lang == "en").map(_.page)
@@ -125,96 +62,13 @@ object NerTrain {
     (rows, labels)
   }
 
-  /** Category-head architecture selection, PROTOCOL-CLEAN: the grid is
-    * scored purely on rotating held-out slices of the phrase DICTIONARY
-    * (no holdout batch is ever read) — mean top-1 over all 7 rotations of
-    * the every-7th-surface fold. `sbt "runMain graft.nlp.NerTrain select"` */
-  private def selectCategory(): Unit = {
-    val (cat, labels) = catRows()
-    def heldOut(m: MlpModel, hold: Seq[Int]): Double = {
-      val h = new Array[Float](m.hidden)
-      var ok = 0
-      hold.foreach { i =>
-        val (x, y) = cat(i)
-        val p = m.forwardSparseAll(x, h)
-        if (y(p.indices.maxBy(p)) == 1f) ok += 1
-      }
-      ok.toDouble / math.max(1, hold.size)
-    }
-    for {
-      hidden <- Seq(32, 64)
-      epochs <- Seq(400, 800)
-      lr <- Seq(0.1f, 0.05f)
-    } {
-      val scores = (0 until 7).map { r =>
-        val hold = cat.indices.filter(_ % 7 == r)
-        val tr = cat.indices.filterNot(_ % 7 == r).map(cat).toVector
-        val m = train(tr, MentionNer.CatDim, hidden, labels, epochs, lr, seed = 42L)
-        heldOut(m, hold)
-      }
-      println(f"NERSELECT hidden=$hidden%2d epochs=$epochs%4d lr=$lr%.2f " +
-        f"mean-top1=${scores.sum / scores.size}%.4f folds=${scores.map(x => f"$x%.2f").mkString(",")}")
-    }
-    // featurization grid (local featurizer copies; same fold protocol)
-    val table = graft.nlp.PhraseMapYaml.loaded.dataCanonical.toVector.sorted
-    val labelIx = labels.zipWithIndex.toMap
-    def featurize(words: Seq[String], ngMin: Int, ngMax: Int,
-        charDim: Int, wordDim: Int): Array[(Int, Float)] = {
-      val idx = scala.collection.mutable.HashSet.empty[Int]
-      def hash(str: String, dim: Int, off: Int): Int =
-        off + math.floorMod(scala.util.hashing.MurmurHash3.stringHash(str), dim)
-      val lemmas = words.map(w => Lexicon.lemma(Lexicon.lower(w)))
-      lemmas.foreach { l =>
-        val w = "#" + l + "#"
-        var n = ngMin
-        while (n <= ngMax) {
-          var i = 0
-          while (i + n <= w.length) { idx += hash(w.substring(i, i + n), charDim, 0); i += 1 }
-          n += 1
-        }
-        idx += hash(l, wordDim, charDim)
-      }
-      if (lemmas.length > 1) idx += hash(lemmas.mkString(" "), wordDim, charDim)
-      idx.toArray.sorted.map(_ -> 1f)
-    }
-    for {
-      (ngMin, ngMax) <- Seq((3, 4), (2, 4), (3, 5), (2, 5))
-      (charDim, wordDim) <- Seq((1536, 512), (3072, 1024))
-    } {
-      val rows = table.map { case (surface, canon) =>
-        val y = new Array[Float](labels.size)
-        y(labelIx(canon)) = 1f
-        (featurize(surface.split(' ').toSeq, ngMin, ngMax, charDim, wordDim), y)
-      }
-      def ho(m: MlpModel, hold: Seq[Int]): Double = {
-        val h = new Array[Float](m.hidden)
-        var ok = 0
-        hold.foreach { i =>
-          val (x, y) = rows(i)
-          val p = m.forwardSparseAll(x, h)
-          if (y(p.indices.maxBy(p)) == 1f) ok += 1
-        }
-        ok.toDouble / math.max(1, hold.size)
-      }
-      val scores = (0 until 7).map { r =>
-        val hold = rows.indices.filter(_ % 7 == r)
-        val tr = rows.indices.filterNot(_ % 7 == r).map(rows).toVector
-        val m = train(tr, charDim + wordDim, 32, labels, 400, 0.05f, seed = 42L)
-        ho(m, hold)
-      }
-      println(f"NERSELECT ng=$ngMin-$ngMax dim=${charDim + wordDim}%5d " +
-        f"mean-top1=${scores.sum / scores.size}%.4f folds=${scores.map(x => f"$x%.2f").mkString(",")}")
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("select")) { selectCategory(); return }
     // ---- span head
     val span = spanRows()
     val pos = span.count(_._2(0) == 1f)
     println(s"NERTRAIN span rows=${span.size} positives=$pos")
-    val spanModel = train(span, MentionNer.SpanDim, 16, Vector("datum"),
-      epochs = 60, lr0 = 0.05f, seed = 42L)
+    val spanModel = MlpModel.train(span, MentionNer.SpanDim, 16, Vector("datum"),
+      epochs = 60, lr0 = 0.05f, decay = 0.997f, seed = 42L)
     locally {
       val h = new Array[Float](spanModel.hidden)
       var tp = 0; var fp = 0; var fn = 0
@@ -232,8 +86,8 @@ object NerTrain {
     locally {
       val hold = cat.indices.filter(_ % 7 == 3).toSet
       val tr = cat.indices.filterNot(hold).map(cat).toVector
-      val m = train(tr, MentionNer.CatDim, 32, labels, epochs = 400,
-        lr0 = 0.05f, seed = 42L)
+      val m = MlpModel.train(tr, MentionNer.CatDim, 32, labels, epochs = 400,
+        lr0 = 0.05f, decay = 0.997f, seed = 42L)
       val h = new Array[Float](m.hidden)
       var ok = 0
       hold.foreach { i =>
@@ -244,11 +98,12 @@ object NerTrain {
       }
       println(f"NERTRAIN cat held-out-surface top1=${ok.toDouble / math.max(1, hold.size)}%.4f (${hold.size} surfaces)")
     }
-    // lr 0.05 selected by the rotating dictionary-fold grid (`select`
-    // mode): mean held-out top-1 0.649 vs 0.614 at 0.1; hidden 32 and the
-    // 3-4-gram/2048-dim featurization beat every wider/denser variant
-    val catModel = train(cat, MentionNer.CatDim, 32, labels, epochs = 400,
-      lr0 = 0.05f, seed = 42L)
+    // lr 0.05 selected by a rotating dictionary-fold grid (COVERAGE.md
+    // "Category-head selection"): mean held-out top-1 0.649 vs 0.614 at
+    // 0.1; hidden 32 and the 3-4-gram/2048-dim featurization beat every
+    // wider/denser variant
+    val catModel = MlpModel.train(cat, MentionNer.CatDim, 32, labels, epochs = 400,
+      lr0 = 0.05f, decay = 0.997f, seed = 42L)
     locally {
       val h = new Array[Float](catModel.hidden)
       var ok = 0
@@ -259,14 +114,8 @@ object NerTrain {
       println(f"NERTRAIN cat train top1=${ok.toDouble / cat.size}%.4f")
     }
 
-    def write(name: String, m: MlpModel): Unit = {
-      val path = java.nio.file.Paths.get(s"src/main/resources/graft/$name")
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(path)))
-      try m.save(out) finally out.close()
-      println(s"NERTRAIN wrote $path")
+    Seq("ner_span.bin" -> spanModel, "ner_cat.bin" -> catModel).foreach { case (name, m) =>
+      println(s"NERTRAIN wrote ${m.saveResource(name)}")
     }
-    write("ner_span.bin", spanModel)
-    write("ner_cat.bin", catModel)
   }
 }

@@ -1493,7 +1493,6 @@ object RuleNlp {
       lastVerb = v
 
       // --- right-side attachments: objects, datives, PPs ----------------
-      // (probe mark p3 recorded after the attachment loop, below)
       val regionEnd = if (vgIdx + 1 < vgs.length) vgs(vgIdx + 1).auxStart else end
       attachRight(toks, chunks, start, end, v, regionEnd, vg, deps, neg, subjOf, objOf, conjChunkHeads)
     }

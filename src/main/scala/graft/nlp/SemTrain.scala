@@ -43,11 +43,11 @@ object SemTrain {
   }
 
   /** Training rows (gold oversampled 6× over the synthetic corpus). */
-  def rows(): Vector[(Array[(Int, Float)], Float)] = {
+  def rows(): Vector[(Array[(Int, Float)], Array[Float])] = {
     import graft.kg.{Holdout, SemanticScorer}
     val gold = goldDocs.flatMap { case (pg, truth) =>
       SemanticScorer.candidates(pg.url, new String(pg.html, UTF_8)).map { c =>
-        c.feats -> (if (truth.contains((c.url, c.party, c.datum))) 1f else 0f)
+        c.feats -> Array(if (truth.contains((c.url, c.party, c.datum))) 1f else 0f)
       }
     }
     // synthetic rows: the generated corpus, labeled by the kernel (exact
@@ -56,13 +56,13 @@ object SemTrain {
     val synth = corpus.flatMap { gp =>
       val kt = Holdout.predict(Vector(gp.page)).toSet
       SemanticScorer.candidates(gp.page.url, new String(gp.page.html, UTF_8)).map { c =>
-        c.feats -> (if (kt.contains((c.url, c.party, c.datum))) 1f else 0f)
+        c.feats -> Array(if (kt.contains((c.url, c.party, c.datum))) 1f else 0f)
       }
     }
     // oversample gold: the naturalistic batches carry the structure signal
     val data = synth.toVector ++ Vector.fill(6)(gold).flatten
     println(s"SEMTRAIN gold=${gold.size} synth=${synth.size} total=${data.size} " +
-      s"positives=${data.count(_._2 == 1f)}")
+      s"positives=${data.count(_._2(0) == 1f)}")
     data
   }
 
@@ -78,58 +78,15 @@ object SemTrain {
     val epochsArg = args.lift(0).map(_.toInt).getOrElse(300)
     val seedArg = args.lift(1).map(_.toLong).getOrElse(13L)
     val dry = args.lift(2).contains("dry")
-    val data: Vector[(Array[(Int, Float)], Float)] = rows()
-
-    val dim = SemanticScorer.Dim
-    val hidden = 16
-    val rnd = new scala.util.Random(seedArg)
-    val w1 = Array.fill(dim * hidden)((rnd.nextFloat() - 0.5f) * 0.1f)
-    val b1 = new Array[Float](hidden)
-    val w2 = Array.fill(hidden)((rnd.nextFloat() - 0.5f) * 0.1f)
-    val b2 = new Array[Float](1)
-
-    val epochs = epochsArg
-    var lr = 0.05f
-    val order = Array.range(0, data.size)
-    for (_ <- 1 to epochs) {
-      for (i <- order.indices.reverse.drop(1)) {
-        val j = rnd.nextInt(i + 1)
-        val t = order(i); order(i) = order(j); order(j) = t
-      }
-      order.foreach { ex =>
-        val (x, t) = data(ex)
-        val h = new Array[Float](hidden)
-        var j = 0
-        while (j < hidden) {
-          var s = b1(j)
-          x.foreach { case (i, xv) => s += xv * w1(i * hidden + j) }
-          h(j) = math.max(0f, s)
-          j += 1
-        }
-        var z = b2(0)
-        var j2 = 0
-        while (j2 < hidden) { z += h(j2) * w2(j2); j2 += 1 }
-        val d = (1.0 / (1.0 + math.exp(-z))).toFloat - t
-        j = 0
-        while (j < hidden) {
-          val dh = if (h(j) > 0f) d * w2(j) else 0f
-          w2(j) -= lr * d * h(j)
-          x.foreach { case (i, xv) => w1(i * hidden + j) -= lr * dh * xv }
-          b1(j) -= lr * dh
-          j += 1
-        }
-        b2(0) -= lr * d
-      }
-      lr *= 0.997f
-    }
-
-    val model = new MlpModel(dim, hidden, Vector("collect"), w1, b1, w2, b2)
+    val data = rows()
+    val model = MlpModel.train(data, SemanticScorer.Dim, hidden = 16,
+      labels = Vector("collect"), epochs = epochsArg, lr0 = 0.05f, decay = 0.997f, seed = seedArg)
     // training-set micro P/R at 0.5 (reported for the record)
-    val h = new Array[Float](hidden)
+    val h = new Array[Float](model.hidden)
     var tp = 0; var fp = 0; var fn = 0
-    data.foreach { case (x, t) =>
+    data.foreach { case (x, y) =>
       val p = model.forwardSparse(x, h) >= 0.5
-      if (p && t == 1f) tp += 1 else if (p) fp += 1 else if (t == 1f) fn += 1
+      if (p && y(0) == 1f) tp += 1 else if (p) fp += 1 else if (y(0) == 1f) fn += 1
     }
     println(f"SEMTRAIN train micro P=${tp.toDouble / math.max(1, tp + fp)}%.4f " +
       f"R=${tp.toDouble / math.max(1, tp + fn)}%.4f")
@@ -147,10 +104,7 @@ object SemTrain {
       println(s"SEMTRAIN closed-batch scorer fps=$fps (epochs=$epochsArg seed=$seedArg)")
     }
     if (dry) { println("SEMTRAIN dry run, not writing"); return }
-    val path = java.nio.file.Paths.get("src/main/resources/graft/sem_mlp.bin")
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      java.nio.file.Files.newOutputStream(path)))
-    try model.save(out) finally out.close()
+    val path = model.saveResource("sem_mlp.bin")
     println(s"SEMTRAIN wrote $path (epochs=$epochsArg seed=$seedArg)")
   }
 }

@@ -114,4 +114,37 @@ class BatchScoringSpec extends AnyFunSuite {
     assert(ml._2 >= kw._2, s"recall: mlp ${ml._2} < keyword ${kw._2}")
     assert(ml._3 > kw._3, s"F1: mlp ${ml._3} <= keyword ${kw._3}")
   }
+
+  test("MlpModel.train is seed-deterministic and save/load round-trips bit for bit") {
+    import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+    import graft.nlp.MlpModel
+    def bytes(m: MlpModel): Array[Byte] = {
+      val bo = new ByteArrayOutputStream
+      val out = new DataOutputStream(bo)
+      m.save(out); out.close()
+      bo.toByteArray
+    }
+    def bits(p: Array[Double]): Seq[Long] = p.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    // 12 sparse rows over 8 features: a multi-label set (3 labels) and a
+    // single-label one, with the two decays the committed trainers use
+    def rows(nl: Int): Vector[(Array[(Int, Float)], Array[Float])] = Vector.tabulate(12) { i =>
+      (Array((i % 5) -> 1f, (5 + i % 3) -> 2f),
+        Array.tabulate(nl)(k => if ((i + k) % 3 == 0) 1f else 0f))
+    }
+    Seq((Vector("a", "b", "c"), 0.998f), (Vector("collect"), 0.997f)).foreach { case (labels, decay) =>
+      val data = rows(labels.size)
+      def train(epochs: Int) =
+        MlpModel.train(data, 8, 4, labels, epochs, lr0 = 0.1f, decay = decay, seed = 7L)
+      val saved = bytes(train(30))
+      assert(saved.sameElements(bytes(train(30))), s"$labels: same seed, different bytes")
+      assert(!saved.sameElements(bytes(train(0))), s"$labels: SGD left the weights unchanged")
+      val m = train(30)
+      val back = MlpModel.load(new DataInputStream(new ByteArrayInputStream(saved)))
+      assert(back.labels == labels && back.hidden == 4 && back.dim == 8)
+      val h = new Array[Float](4)
+      data.foreach { case (x, _) =>
+        assert(bits(back.forwardSparseAll(x, h)) == bits(m.forwardSparseAll(x, h)))
+      }
+    }
+  }
 }

@@ -61,8 +61,36 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("YAML pattern bank equals the inline compiler test vector (no drift)") {
-    assert(graft.kg.Patterns.bank == graft.kg.Patterns.bankInline)
+  test("pattern DSL compiler: required chains, capture slots, token_map, WE and unknown names") {
+    import graft.kg.Patterns.{compile, ImplicitWeArg, TokenMatcher}
+    val Vector(share, collect) = compile(Seq(
+      ("*VERB_SHARE_WITH:root|ccomp",
+        Seq(":nsubj@E1", "!:dobj@DT", "with|to:prep,:pobj@E2"),
+        Seq("SHARE", "E1", "DT", "E2|WE")),
+      ("drink|soak",
+        Seq("!in:prep,:pobj@DT", ":nsubj@E1", "of:prep,:pobj@DT"),
+        Seq("COLLECT", "WE", "DT", "NOPE"))))
+    // `*NAME` expands the token_map lexicon; no dep spec matches any dep
+    assert(share.root == TokenMatcher(Lexicon.tokenMap("VERB_SHARE_WITH"), Set("root", "ccomp")))
+    assert(share.root.lemmas.nonEmpty)
+    assert(collect.root == TokenMatcher(Set("drink", "soak"), Set.empty))
+    assert((share.id, collect.id) == ((0, 1)))
+    // `!` marks a chain required
+    assert(share.required == Set(1) && share.requiredMask == 2L)
+    assert(collect.required == Set(0) && collect.requiredMask == 1L)
+    // `@name` captures take slots in first-seen order; a repeated name
+    // reuses its slot; an item without a capture gets -1
+    assert(share.saveNames == Vector("E1", "DT", "E2"))
+    assert(share.chains(0) == Vector(TokenMatcher(Set.empty, Set("nsubj")) -> 0))
+    assert(share.chains(2) == Vector(TokenMatcher(Set("with", "to"), Set("prep")) -> -1,
+      TokenMatcher(Set.empty, Set("pobj")) -> 2))
+    assert(collect.saveNames == Vector("DT", "E1"))
+    assert(collect.chains.map(_.map(_._2)) == Vector(Vector(-1, 0), Vector(1), Vector(-1, 0)))
+    // transform args: `|` fallbacks, `WE` the implicit first party, an
+    // unknown name -1
+    assert(share.action == "SHARE" && collect.action == "COLLECT")
+    assert(share.argSlots.map(_.toVector) == Vector(Vector(0), Vector(1), Vector(2, ImplicitWeArg)))
+    assert(collect.argSlots.map(_.toVector) == Vector(Vector(ImplicitWeArg), Vector(0), Vector(-1)))
   }
 
   test("NOT_ and positive predicates partition the edge-type universe (SO5)") {
