@@ -141,6 +141,8 @@ object MlpModel {
     val b1 = new Array[Float](hidden)
     val w2 = Array.fill(hidden * nl)((rnd.nextFloat() - 0.5f) * 0.1f)
     val b2 = new Array[Float](nl)
+    // the model shares the weight arrays the updates below write
+    val model = new MlpModel(dim, hidden, labels, w1, b1, w2, b2)
     var lr = lr0
     val order = Array.range(0, data.size)
     val h = new Array[Float](hidden)
@@ -152,24 +154,14 @@ object MlpModel {
       }
       order.foreach { ex =>
         val (x, y) = data(ex)
-        var j = 0
-        while (j < hidden) {
-          var s = b1(j)
-          var k = 0
-          while (k < x.length) { val (i2, xv) = x(k); s += xv * w1(i2 * hidden + j); k += 1 }
-          h(j) = math.max(0f, s)
-          j += 1
-        }
+        val p = model.forwardSparseAll(x, h)
         var c = 0
         while (c < nl) {
-          var z = b2(c)
-          var j2 = 0
-          while (j2 < hidden) { z += h(j2) * w2(j2 * nl + c); j2 += 1 }
-          d(c) = (1.0 / (1.0 + math.exp(-z))).toFloat - y(c) // dBCE/dz
+          d(c) = p(c).toFloat - y(c) // dBCE/dz
           b2(c) -= lr * d(c)
           c += 1
         }
-        j = 0
+        var j = 0
         while (j < hidden) {
           var dh = 0f
           var c2 = 0
@@ -190,7 +182,7 @@ object MlpModel {
       }
       lr *= decay
     }
-    new MlpModel(dim, hidden, labels, w1, b1, w2, b2)
+    model
   }
 }
 
